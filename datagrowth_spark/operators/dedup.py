@@ -670,25 +670,17 @@ def minhash_lsh_pairs(
     Output: (id_a, id_b, est_jaccard).
     """
     assert num_hashes % bands == 0, "bands must divide num_hashes"
-    rows = num_hashes // bands
     from datagrowth_spark.core.caching import persist_registered
 
-    # The signature frame feeds every band branch plus both verify joins
-    # (~bands+2 consumers); persist it so the shingle+minhash pipeline
+    # The signature frame feeds the band projection plus both verify
+    # joins (3 consumers); persist it so the shingle+minhash pipeline
     # runs once. Signatures are tiny (num_hashes longs per doc). No
     # cleanup handle on this operator, so the cache registers with the
     # session release hook (core/caching.py — r8 hygiene gate).
     sig = persist_registered(minhash_signature(df, text_col, id_col, num_hashes, n))
     mh_cols = [f"mh_{i}" for i in range(num_hashes)]
 
-    band_frames = []
-    for b in range(bands):
-        band_cols = [F.col(c).cast("string") for c in mh_cols[b * rows:(b + 1) * rows]]
-        key = F.md5(F.concat_ws(",", F.lit(str(b)), *band_cols))
-        band_frames.append(sig.select(F.col("id"), key.alias("band_key")))
-    banded = band_frames[0]
-    for frame in band_frames[1:]:
-        banded = banded.unionByName(frame)
+    banded = _banded_keys(sig, num_hashes, bands).select("id", "band_key")
 
     a = banded.alias("a")
     b = banded.alias("b")
@@ -711,38 +703,36 @@ def minhash_lsh_pairs(
 
 
 def _banded_keys(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
-    """(id, band_key) rows — one md5 bucket key per band of the signature."""
+    """``sig`` with one row per (row, band): every input column plus
+    ``band_key``, the md5 bucket key of that band. All keys come from
+    ONE projection (an explode over the per-band key array), so the
+    signature frame is scanned once, not once per band."""
     rows = num_hashes // bands
     mh_cols = [f"mh_{i}" for i in range(num_hashes)]
-    frames = []
-    for b in range(bands):
-        band_cols = [F.col(c).cast("string") for c in mh_cols[b * rows:(b + 1) * rows]]
-        key = F.md5(F.concat_ws(",", F.lit(str(b)), *band_cols))
-        frames.append(sig.select(F.col("id"), key.alias("band_key")))
-    banded = frames[0]
-    for frame in frames[1:]:
-        banded = banded.unionByName(frame)
-    return banded
+    keys = [
+        F.md5(F.concat_ws(",", F.lit(str(b)),
+                          *[F.col(c).cast("string") for c in mh_cols[b * rows:(b + 1) * rows]]))
+        for b in range(bands)
+    ]
+    return sig.withColumn("band_key", F.explode(F.array(*keys)))
 
 
 class IncrementalDedupResult:
     """Result handle for :func:`incremental_minhash_dedup`.
 
     Unpacks as the historical ``(verdicts, new_sigs)`` 2-tuple;
-    :meth:`cleanup` drops BOTH persisted frames the operator created
-    (the batch signatures and the internal candidate-pair cache).
-    Callers must materialize ``verdicts`` before calling it. One-shot
-    callers that never clean up leak two cached plans until the session
-    ends — fine for a query, wrong for a per-batch ingest daemon.
+    :meth:`cleanup` drops the one persisted frame the operator created,
+    the batch signatures ``new_sigs``. Callers must materialize
+    ``verdicts`` before calling it. One-shot callers that never clean
+    up leak one cached plan until the session ends — fine for a query,
+    wrong for a per-batch ingest daemon.
     """
 
-    __slots__ = ("verdicts", "new_sigs", "_caches")
+    __slots__ = ("verdicts", "new_sigs")
 
-    def __init__(self, verdicts: DataFrame, new_sigs: DataFrame,
-                 caches: list[DataFrame]) -> None:
+    def __init__(self, verdicts: DataFrame, new_sigs: DataFrame) -> None:
         self.verdicts = verdicts
         self.new_sigs = new_sigs
-        self._caches = caches
 
     def __iter__(self):
         return iter((self.verdicts, self.new_sigs))
@@ -753,12 +743,11 @@ class IncrementalDedupResult:
         lifetime (mirror of ``BPETrainResult.caches``): either call
         :meth:`cleanup` after materializing ``verdicts``, or register
         each with a session release hook."""
-        return list(self._caches)
+        return [self.new_sigs]
 
     def cleanup(self, blocking: bool = False) -> None:
         """Unpersist every frame this operator cached."""
-        for frame in self._caches:
-            frame.unpersist(blocking)
+        self.new_sigs.unpersist(blocking)
 
 
 def incremental_minhash_dedup(
@@ -770,8 +759,6 @@ def incremental_minhash_dedup(
     bands: int = 4,
     n: int = 3,
     threshold: float = 0.5,
-    broadcast_batch: bool = True,
-    broadcast_touched_limit: int = 1_000_000,
 ) -> IncrementalDedupResult:
     """Near-dup detection for an INCREMENTAL ingest batch against a
     persisted MinHash signature store — the production shape at corpus
@@ -783,130 +770,89 @@ def incremental_minhash_dedup(
     documents in the same batch (smaller id wins, so batch-internal
     dups resolve deterministically). Returns an
     :class:`IncrementalDedupResult` (unpacks as ``(verdicts,
-    new_sigs)``; ``.cleanup()`` drops the operator's caches):
+    new_sigs)``; ``.cleanup()`` drops the operator's cache):
 
     * ``verdicts`` — one row per new document:
       (id, is_dup, dup_of, est_jaccard); ``dup_of`` is the smallest
-      matching id (store or batch), NULL when the document is novel.
+      matching id (store or batch), NULL when the document is novel,
+      and ``est_jaccard`` is the estimate of that match.
     * ``new_sigs`` — the batch's signature rows, schema-compatible with
       the store for the caller to append (the store stays the single
       source of truth; this operator never mutates it).
 
-    Scale shape: the store-side band keys are derived from stored
-    signatures (k longs per historical doc — no text touched), and the
-    store is never SHUFFLED: with ``broadcast_batch`` (default) the
-    candidate join streams the store's band keys past a broadcast of
-    the batch's, and the verification join first reduces the store by
-    a broadcast SEMI join on the (id-only) touched-candidate set, so
-    the store's wide signature columns are read only for touched rows
-    and never repartitioned. This must not be left to AQE — a 100k-doc
-    batch's frames sit just past the 10 MB auto-broadcast estimate, and
-    the silent fallback is a sort-merge join that shuffles ALL k
-    signature columns of the full store per ingest batch (measured
-    super-linear in store size at 100M store rows). The candidate-pair
-    frame itself is deliberately NEVER broadcast: its size is governed
-    by store-side band-bucket density, not batch size, so a hot
-    boilerplate bucket must degrade to a (candidate-bounded) shuffle,
-    not a driver OOM. Set ``broadcast_batch=False`` only for
-    backfill-sized batches whose id set genuinely can't broadcast, and
-    expect store-shuffle cost.
+    A pair is a candidate when it agrees on every row of at least one
+    band, and a match when ``round(agree / num_hashes, 6) >=
+    threshold``. Each side of a pair is verified with the signature
+    it was banded from: a store row with its STORED signature, a batch
+    row with the batch one. So a batch document whose id already
+    exists in the store is compared with the store's row for that id
+    (and may be reported as ``dup_of`` itself); when the smallest
+    matching id has both a store and a batch signature, the larger of
+    its two estimates is reported.
 
-    NOTE (construction-time work, ADVICE r7): with ``broadcast_batch``
-    this function runs the candidate-generation job EAGERLY — a
-    ``count()`` on the persisted candidate-pair frame gates the touched
-    broadcast, so the heavy store band-key pass fires when the operator
-    is BUILT, not when the caller first executes ``verdicts``. The
-    count doubles as the cache materialization the main job needs
-    anyway, so no work is wasted — but batch schedulers should expect
-    Spark jobs at construction. ``broadcast_touched_limit`` defaults to
-    1M ids (~8 MB of longs; the executor-side hash relation runs
-    several times that) — raise it only with executor memory to spare.
+    Scale shape: one pass over the store. Its band keys are derived
+    from stored signatures (k longs per row — no text touched) in one
+    projection, and each store band row streams, with its own ``mh_*``
+    columns, past a broadcast of the batch's band rows; the estimate
+    is computed and thresholded inside that join, so only verified
+    matches leave it and the store is never shuffled or read twice.
+    The broadcast is batch-bounded (``bands`` rows of k+1 longs plus a
+    key per new document) and forced, not left to AQE: a 100k-doc
+    batch sits past the 10 MB auto-broadcast estimate, and the
+    sort-merge fallback would shuffle the whole store per batch. A hot
+    store bucket multiplies join OUTPUT rows, which are filtered in the
+    same stage, never a driver-side structure. Only the verified
+    matches reach the per-id aggregate.
+
+    NOTE (construction-time work): building the result fires no Spark
+    job; every job runs when the caller first executes ``verdicts``.
+    ``new_sigs`` is persisted lazily and populated by that first job.
     """
+    new_sigs = minhash_signature(new_docs, text_col, id_col, num_hashes, n).persist()
+    verdicts = incremental_verdicts(new_sigs, signature_store, num_hashes, bands, threshold)
+    return IncrementalDedupResult(verdicts, new_sigs)
+
+
+def incremental_verdicts(new_sigs: DataFrame, signature_store: DataFrame,
+                         num_hashes: int = 16, bands: int = 4,
+                         threshold: float = 0.5) -> DataFrame:
+    """The probe of :func:`incremental_minhash_dedup` over a batch
+    signature frame — split out so it can be checked against arbitrary
+    signature tables directly. Both inputs carry (id, mh_0..mh_{k-1});
+    ``new_sigs`` is read several times, so pass a persisted frame."""
     assert num_hashes % bands == 0, "bands must divide num_hashes"
     mh_cols = [f"mh_{i}" for i in range(num_hashes)]
-    hint = F.broadcast if broadcast_batch else (lambda df: df)
-    new_sigs = minhash_signature(new_docs, text_col, id_col, num_hashes, n).persist()
 
-    banded_new = _banded_keys(new_sigs, num_hashes, bands)
-    banded_store = _banded_keys(signature_store, num_hashes, bands)
-    nb = hint(banded_new).alias("a")
-    cand_old = (
-        nb.join(banded_store.alias("s"), F.col("a.band_key") == F.col("s.band_key"))
-        .select(F.col("a.id").alias("id"), F.col("s.id").alias("other"))
-    )
-    cand_new = (
-        nb.join(banded_new.alias("b"),
-                (F.col("a.band_key") == F.col("b.band_key")) & (F.col("a.id") > F.col("b.id")))
-        .select(F.col("a.id").alias("id"), F.col("b.id").alias("other"))
-    )
-    # Persisted because the plan references it TWICE — the `touched`
-    # broadcast build and the verification join's probe side. Without
-    # the cache each reference re-evaluates the full store band-key
-    # pass (union of `bands` md5 projections over every stored
-    # signature): measured +60% per ingest at a 10M-row store. The
-    # frame is candidate-bounded (pair rows, two longs each); the
-    # broadcast-exchange job populates it and the main stages read it.
-    # Lifetime: DataFrame caches live in the SQL CacheManager (a strong
-    # driver-side ref the ContextCleaner never GCs), so the result
-    # handle's cleanup() owns both this cache and new_sigs — a
-    # per-batch ingest daemon calls it once verdicts materialize and
-    # cannot accumulate candidate caches.
-    candidates = cand_old.unionByName(cand_new).distinct().persist()
+    def side(sig: DataFrame, id_name: str, prefix: str) -> DataFrame:
+        return _banded_keys(sig.select("id", *mh_cols), num_hashes, bands).select(
+            F.col("id").alias(id_name), "band_key",
+            *[F.col(c).alias(f"{prefix}{c}") for c in mh_cols])
 
-    all_sigs = signature_store.select("id", *mh_cols).unionByName(
-        new_sigs.select("id", *mh_cols))
-    sig_a = new_sigs.select(F.col("id"), *[F.col(c).alias(f"a_{c}") for c in mh_cols])
-    sig_b = all_sigs.select(F.col("id").alias("other"),
-                            *[F.col(c).alias(f"b_{c}") for c in mh_cols])
+    batch = F.broadcast(side(new_sigs, "id", "a_"))
     agree = sum(
         F.when(F.col(f"a_{c}") == F.col(f"b_{c}"), 1).otherwise(0) for c in mh_cols
     )
-    # Forced broadcasts stay on frames with a KNOWN bound: sig_a is
-    # batch-sized; `touched` is id-only (≤ one long per distinct
-    # candidate partner). The candidate-pair frame itself is NOT
-    # broadcast — its row count scales with store-side band-bucket
-    # density (hot boilerplate buckets can make it huge), so forcing it
-    # driver-side would trade a shuffle for an OOM. Instead the store
-    # is reduced by a broadcast SEMI join (streams past a hashed id
-    # set, zero store shuffle, zero wide columns), after which both
-    # join inputs are candidate-bounded and the verification join can
-    # shuffle safely.
-    cand_sig = candidates.join(hint(sig_a), "id")
-    touched = candidates.select(F.col("other").alias("id")).distinct()
-    # `touched`'s size is governed by store-side band-bucket density —
-    # the same hot-boilerplate-bucket growth that forbids broadcasting
-    # `candidates` — so its broadcast is gated on a bounded count. The
-    # count() runs on the persisted candidate frame (materializing a
-    # cache the main job needs anyway) and bounds |touched| from above.
-    # Past the limit the semi join degrades to a shuffle of the
-    # candidate-bounded id set, never a driver/executor OOM.
-    touched_bounded = (
-        broadcast_batch and candidates.count() <= broadcast_touched_limit
-    )
-    sig_b_touched = (
-        sig_b.join(F.broadcast(touched) if touched_bounded else touched,
-                   sig_b["other"] == F.col("id"), "semi")
-        if broadcast_batch else sig_b
-    )
+    est = F.round(agree / F.lit(num_hashes), 6).alias("est_jaccard")
+    store_hits = batch.join(side(signature_store, "other", "b_"), "band_key")
+    batch_hits = batch.join(
+        side(new_sigs, "other", "b_"), "band_key").where(F.col("id") > F.col("other"))
+    # A pair agreeing in several bands arrives once per band; min() over
+    # (other, -est) is idempotent in those repeats, and its second field
+    # makes the estimate deterministic when `other` has two signatures.
+    best = F.min(F.struct(F.col("other"), (-F.col("est_jaccard")).alias("neg_est")))
     matches = (
-        cand_sig.join(sig_b_touched, "other")
-        .withColumn("est_jaccard", F.round(agree / F.lit(num_hashes), 6))
+        store_hits.select("id", "other", est)
+        .unionByName(batch_hits.select("id", "other", est))
         .where(F.col("est_jaccard") >= threshold)
         .groupBy("id")
-        .agg(F.min("other").alias("dup_of"),
-             F.min_by("est_jaccard", "other").alias("est_jaccard"))
+        .agg(best.alias("best"))
     )
-    verdicts = (
-        new_sigs.select("id").join(matches, "id", "left")
-        .select(
-            "id",
-            F.col("dup_of").isNotNull().alias("is_dup"),
-            "dup_of",
-            "est_jaccard",
-        )
+    return new_sigs.select("id").join(matches, "id", "left").select(
+        "id",
+        F.col("best").isNotNull().alias("is_dup"),
+        F.col("best.other").alias("dup_of"),
+        (-F.col("best.neg_est")).alias("est_jaccard"),
     )
-
-    return IncrementalDedupResult(verdicts, new_sigs, [candidates, new_sigs])
 
 
 def simhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",

@@ -119,9 +119,10 @@ class SignatureStore:
         They are deliberately NOT deduplicated here: a per-read
         latest-wins window would shuffle the whole store on every
         probe, while duplicate signature rows are semantically
-        harmless to the probe (candidate pairs are ``distinct``-ed and
-        the verification's best-match aggregates are idempotent in
-        duplicated matches) and the next :meth:`compact` heals them."""
+        harmless to the probe (a duplicated row only repeats its
+        verified matches, and the per-id best-match aggregate is
+        idempotent in repeats) and the next :meth:`compact` heals
+        them."""
         entries = self._entries()
         schema = _signature_schema(self.num_hashes)
         if not entries:

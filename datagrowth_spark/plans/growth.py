@@ -337,14 +337,17 @@ class GrowthProcessor:
         requests = self._build_requests(pending).persist()
         try:
             fetch_kwargs = {"transport": self.transport} if self.transport else {}
-            # return_responses=False: the join-back below restricts the
-            # cache scan to this batch's signatures BY ITSELF (left join
-            # on signature), so fetch's own result semi-join — and the
-            # signature-frame localCheckpoint job that feeds it — would
-            # duplicate that filter (r13, guide §2.4: one scan + one
-            # join instead of two joins; fewer driver jobs per grow
-            # cycle). Misses are appended to the cache inside the call,
-            # so the pages are committed before latest() is planned.
+            # return_responses=False: the join-back below keeps only
+            # this batch's signatures (left join on signature), so
+            # fetch's own result semi-join — and the signature-frame
+            # localCheckpoint job that feeds it — would repeat that
+            # filter (r13: one join instead of two; fewer driver jobs
+            # per grow cycle). The join does NOT restrict the cache
+            # scan: cache.latest() is unpruned here, so its scan and
+            # latest-wins window cover the whole cache on every cycle
+            # (the pruned point lookup fetch can do is not used).
+            # Misses are appended to the cache inside the call, so the
+            # pages are committed before latest() is planned.
             fetch(requests.select([f.name for f in REQUEST_SCHEMA.fields]),
                   cache, return_responses=False, **fetch_kwargs)
             # Two strings per pending document — the minimal state the

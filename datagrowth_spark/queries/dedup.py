@@ -398,22 +398,22 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = docs.where(F.col("doc_id") % 10 >= 8)
     # The store is a MATERIALIZED table in production (that's the point
     # of the operator); persist stands in for the parquet signature
-    # table so the band branches don't re-shingle the corpus per branch.
+    # table so the probe never re-shingles the corpus.
     store_sigs = _persist(DD.minhash_signature(store_docs, "text", "doc_id",
                                                num_hashes=_NUM_HASHES, n=3))
     result = DD.incremental_minhash_dedup(
         batch, store_sigs, "text", "doc_id",
         num_hashes=_NUM_HASHES, bands=_BANDS, n=3, threshold=0.2)
-    # The operator's internal caches are registered with the session
-    # release hook instead of cleanup() (see the leak note below).
+    # The operator's batch-signature cache is registered with the
+    # session release hook instead of cleanup(): cleanup() here would
+    # fire at construction time — before the caller materializes the
+    # returned frame — so every consumer of the batch signatures would
+    # re-shingle the batch at execution. The cache lives until
+    # release_caches(), like store_sigs; real ingest loops materialize
+    # verdicts first and then cleanup (see streaming/dedup.py
+    # process_batch).
     for _c in result.caches:
         _register_cache(_c)
-    # result.cleanup() here would fire at construction time — before
-    # the caller materializes the returned frame — forcing the store
-    # band-key pass to run twice at execution. The operator's caches
-    # (registered above) live until release_caches(), like store_sigs;
-    # real ingest loops materialize verdicts first and then cleanup
-    # (see streaming/dedup.py process_batch).
     return result.verdicts.select(
         F.col("id").alias("doc_id"), "is_dup", "dup_of", "est_jaccard")
 

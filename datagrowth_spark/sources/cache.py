@@ -463,11 +463,17 @@ def fetch(
 
     ``unique_signatures=True`` promises the caller already deduplicated
     signatures (e.g. a driver-walker frontier keyed by signature) — the
-    per-call dedup exchange is skipped (r13, guide §2.4: the pipeline
-    family's per-run cost is driver-round/job count, and every removed
-    exchange is one fewer AQE materialization job). ``n_requests`` is
-    the driver-known request count; on the cold path (empty cache →
-    every request is a miss) it replaces the miss-count job.
+    per-call dedup exchange is skipped (r13: the pipeline family's
+    per-run cost is driver-round/job count, and every removed exchange
+    is one fewer AQE materialization job). The promise is not checked.
+    Broken, every duplicate row is a miss of its own: it is sent and
+    appended once per copy, and with a page-budget column each copy
+    walks its chain with its own budget, instead of one walk with the
+    largest. ``n_requests`` is the driver-known request count; it is
+    honoured only together with ``unique_signatures`` (without the
+    promise, the count before dedup overstates the misses), and then
+    only on the cold path (empty cache → every request is a miss),
+    where it replaces the miss-count job.
     """
     spark = requests_df.sparkSession
     req_fields = [f.name for f in REQUEST_SCHEMA.fields]
@@ -536,9 +542,12 @@ def fetch(
             ).persist()
         extra_sigs: list = []
         try:
-            # Cold path with a driver-known request count: every request
-            # IS a miss, so the count job is pure overhead (r13).
-            n_misses = (n_requests if cold and n_requests is not None
+            # Cold path with a driver-known count of unique requests:
+            # every request IS a miss, so the count job is pure overhead
+            # (r13). A raw count without the uniqueness promise is not
+            # the miss count — duplicates collapse above.
+            n_misses = (n_requests
+                        if cold and unique_signatures and n_requests is not None
                         else misses.count())
             if n_misses:
                 if cache_only:

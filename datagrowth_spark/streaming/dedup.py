@@ -58,15 +58,18 @@ class StreamingNearDupIndex:
     oracle pins.
 
     Scale shape: the historical corpus is never re-shingled — only its
-    (id, mh_*) signature table participates, and only in band buckets
-    the micro-batch touches. Store and verdict state are materialized
-    per batch (localCheckpoint here; a signature TABLE append on a
-    cluster), so plan depth stays bounded across arbitrarily many
-    micro-batches. ``state_partitions`` bounds the PARTITION count too:
-    without it each union-append stacks the batch's shuffle partitions
-    onto the checkpointed state, growing tasks-per-scan linearly in
-    batch count — size it to the expected store, like a stream's
-    state-store partitioning, whenever the drain is long.
+    (id, mh_*) signature table participates, scanned once per
+    micro-batch by the one-pass probe. Store and verdict state are
+    materialized per batch, so plan depth stays bounded across
+    arbitrarily many micro-batches: in-memory mode checkpoints the
+    batch verdicts and the grown store here (localCheckpoint); the
+    persisted mode appends to the signature store, whose ``ingest``
+    already returns materialized verdicts, and checkpoints only the
+    accumulated verdicts. ``state_partitions`` bounds the PARTITION
+    count too: without it each union-append stacks the batch's shuffle
+    partitions onto the checkpointed state, growing tasks-per-scan
+    linearly in batch count — size it to the expected store, like a
+    stream's state-store partitioning, whenever the drain is long.
     """
 
     def __init__(
@@ -118,10 +121,13 @@ class StreamingNearDupIndex:
         if self.sig_store is not None:
             # Persisted mode: the store owns signature state (atomic
             # batch append + TTL/compaction); verdicts materialize via
-            # the store's one-call ingest.
-            verdicts = self._bounded(self.sig_store.ingest(
+            # the store's one-call ingest, so they are checkpointed
+            # again only to repartition them.
+            verdicts = self.sig_store.ingest(
                 batch_df, self.text_col, self.id_col,
-                bands=self.bands, n=self.n, threshold=self.threshold))
+                bands=self.bands, n=self.n, threshold=self.threshold)
+            if self.state_partitions is not None:
+                verdicts = self._bounded(verdicts)
             if (self.vacuum_every
                     and (self.batches_processed + 1) % self.vacuum_every == 0):
                 self.sig_store.vacuum()

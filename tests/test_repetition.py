@@ -175,12 +175,11 @@ class TestIncrementalDedup:
         result.cleanup()
 
     def test_cleanup_empties_cache(self, spark):
-        """The operator persists the batch signatures AND an internal
-        candidate-pair frame (the plan references it twice); the result
-        handle's cleanup() must drop BOTH — DataFrame caches live in the
-        SQL CacheManager, a strong driver-side ref the ContextCleaner
-        never collects, so a leak here accumulates one cache per ingest
-        batch in a daemon."""
+        """The operator persists the batch signatures (the probe reads
+        them several times); the result handle's cleanup() must drop
+        that cache — DataFrame caches live in the SQL CacheManager, a
+        strong driver-side ref the ContextCleaner never collects, so a
+        leak here accumulates one cache per ingest batch in a daemon."""
         from datagrowth_spark.operators.dedup import (
             incremental_minhash_dedup, minhash_signature)
 

@@ -1,14 +1,17 @@
 """SignatureStore lifecycle (operators/sigstore.py): atomic appends,
 TTL eviction with an injectable clock, crash-safe compaction, probe
-equivalence, and the persisted streaming-index mode."""
+equivalence, the persisted streaming-index mode, a brute-force
+reference for the store probe and its Spark job budget."""
 
 import os
+import random
 
 import pytest
 from pyspark.sql import functions as F
 
 from datagrowth_spark.operators.dedup import (
-    incremental_minhash_dedup, minhash_signature)
+    _banded_keys, incremental_minhash_dedup, incremental_verdicts,
+    minhash_signature)
 from datagrowth_spark.operators.sigstore import SignatureStore
 
 NH = 8
@@ -246,3 +249,143 @@ class TestStreamingPersistedMode:
         # vacuum_every=1 ran after each batch: folded layout only
         assert all(os.path.basename(e).startswith("compact-")
                    for e in store._entries())
+
+
+BANDS = 4
+THRESHOLD = 0.5
+#: Spark jobs one SignatureStore.ingest of a small batch into a small
+#: store fires (local[4], 4 shuffle partitions), measured with the
+#: one-pass probe. Per-band re-scans of the signatures raise it to 20.
+INGEST_JOB_BUDGET = 11
+
+
+def _sig_frame(spark, rows):
+    schema = ", ".join(["id long"] + [f"mh_{i} long" for i in range(NH)])
+    return spark.createDataFrame([(i, *sig) for i, sig in rows], schema)
+
+
+def _reference(batch, store):
+    """Brute-force verdicts {id: (is_dup, dup_of, est_jaccard)}: a pair
+    is a candidate when it agrees on every row of at least one band,
+    verified when round(agree / k, 6) >= THRESHOLD; dup_of is the
+    smallest verified id, with the estimate of that id's pair (the
+    larger one when that id has a store and a batch signature)."""
+    rows = NH // BANDS
+
+    def candidate(a, b):
+        return any(a[k * rows:(k + 1) * rows] == b[k * rows:(k + 1) * rows]
+                   for k in range(BANDS))
+
+    def est(a, b):
+        return round(sum(x == y for x, y in zip(a, b)) / NH, 6)
+
+    out = {}
+    for i, a in batch:
+        partners = store + [(j, b) for j, b in batch if j < i]
+        verified = [(j, est(a, b)) for j, b in partners
+                    if candidate(a, b) and est(a, b) >= THRESHOLD]
+        if verified:
+            j = min(j for j, _ in verified)
+            out[i] = (True, j, max(e for o, e in verified if o == j))
+        else:
+            out[i] = (False, None, None)
+    return out
+
+
+def _random_tables(seed):
+    """Random signatures over a 3-value alphabet (frequent band hits).
+    Hot bucket: store ids 100..139 and batch ids 150..152 share band 0
+    and draw the rest from another alphabet, so they only meet each
+    other. New batch ids 0..29 are the smallest, so their batch-internal
+    matches decide ``dup_of``; batch ids 200..256 (step 4) are also
+    stored ids."""
+    rng = random.Random(seed)
+    sig = lambda: [rng.randrange(3) for _ in range(NH)]  # noqa: E731
+    hot = lambda: [9, 9] + [rng.randrange(3, 6) for _ in range(NH - 2)]  # noqa: E731
+    store = [(i, hot()) for i in range(100, 140)] + [(i, sig()) for i in range(200, 400, 2)]
+    batch = ([(i, sig()) for i in range(30)] + [(i, hot()) for i in range(150, 153)]
+             + [(i, sig()) for i in range(200, 260, 4)])
+    return batch, store
+
+
+class TestProbeReference:
+    @pytest.mark.parametrize("seed", [1, 2, 3])
+    def test_random_tables_match_brute_force(self, spark, seed):
+        batch, store = _random_tables(seed)
+        want = _reference(batch, store)
+        store_ids = {i for i, _ in store}
+        dups = [v for v in want.values() if v[0]]
+        # the cases the reference must exercise on every seed
+        assert any(j not in store_ids for _, j, _ in dups)      # batch-internal
+        assert any(100 <= j < 140 for _, j, _ in dups)          # hot bucket
+        assert any(e == THRESHOLD for _, _, e in dups)          # exactly at threshold
+        assert any(i in store_ids for i, _ in batch)            # id in both
+        got = incremental_verdicts(_sig_frame(spark, batch), _sig_frame(spark, store),
+                                   num_hashes=NH, bands=BANDS, threshold=THRESHOLD)
+        assert {r["id"]: (r["is_dup"], r["dup_of"], r["est_jaccard"])
+                for r in got.collect()} == want
+
+    def test_batch_id_in_store_verifies_against_stored_signature(self, spark):
+        """A batch document whose id is already stored is compared with
+        the STORED signature of that id (5 of 8 agree → 0.625), not with
+        its own batch signature (which would give 1.0). When the smallest
+        match has both signatures, the larger estimate is reported: batch
+        doc 9 copies batch doc 5 (1.0) and matches stored 5 at 0.625."""
+        old = [1, 1, 2, 2, 3, 3, 4, 4]
+        new = [1, 1, 2, 2, 3, 0, 0, 0]
+        got = incremental_verdicts(
+            _sig_frame(spark, [(5, new), (9, new)]), _sig_frame(spark, [(5, old)]),
+            num_hashes=NH, bands=BANDS, threshold=THRESHOLD)
+        assert sorted(tuple(r) for r in got.collect()) == [
+            (5, True, 5, 0.625), (9, True, 5, 1.0)]
+
+    def test_banded_keys_match_per_band_union(self, spark):
+        """One exploded projection yields the same (id, band_key)
+        multiset as one md5 projection per band, unioned."""
+        rng = random.Random(7)
+        sigs = _sig_frame(spark, [(i % 20, [rng.randrange(3) for _ in range(NH)])
+                                  for i in range(30)])
+        rows = NH // BANDS
+        union = None
+        for b in range(BANDS):
+            cols = [F.col(f"mh_{i}").cast("string") for i in range(b * rows, (b + 1) * rows)]
+            frame = sigs.select("id", F.md5(F.concat_ws(",", F.lit(str(b)), *cols))
+                                .alias("band_key"))
+            union = frame if union is None else union.unionByName(frame)
+        got = _banded_keys(sigs, NH, BANDS).select("id", "band_key")
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, union.collect()))
+
+
+class TestProbeJobs:
+    @staticmethod
+    def _jobs_in_group(spark, group, fn):
+        sc = spark.sparkContext
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    def test_probe_construction_fires_no_jobs(self, spark):
+        docs = _docs(spark, [(1, "the quick brown fox jumps over")])
+        store_sigs = _sigs(spark, docs).localCheckpoint(eager=True)
+        result, jobs = self._jobs_in_group(
+            spark, "probe-construction", lambda: incremental_minhash_dedup(
+                _docs(spark, [(10, "the quick brown fox jumps over")]), store_sigs,
+                num_hashes=NH, bands=BANDS, threshold=0.2))
+        assert jobs == []
+        assert [tuple(r) for r in result.verdicts.collect()] == [(10, True, 1, 1.0)]
+        result.cleanup()
+
+    def test_ingest_within_job_budget(self, spark, tmp_path):
+        store = SignatureStore(spark, str(tmp_path / "s"), num_hashes=NH)
+        store.append(_sigs(spark, _docs(spark, [
+            (i, f"document {i % 5} body with shared words w{i % 3}") for i in range(20)])))
+        batch = _docs(spark, [
+            (100 + i, f"document {i % 5} body with shared words w{i % 2}") for i in range(6)])
+        verdicts, jobs = self._jobs_in_group(
+            spark, "ingest-budget",
+            lambda: store.ingest(batch, bands=BANDS, n=3, threshold=0.2))
+        assert len(jobs) <= INGEST_JOB_BUDGET, jobs
+        assert verdicts.where("is_dup").count() == 6

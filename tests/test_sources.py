@@ -70,6 +70,16 @@ class TestFetch:
         with pytest.raises(LookupError):
             fetch(reqs, cache, transport=mock_api_transport, cache_only=True)
 
+    def test_n_requests_without_unique_promise_counts_true_misses(self, spark, tmp_path):
+        """``n_requests`` stands in for the miss count only with the
+        ``unique_signatures`` promise: without it the frame is
+        deduplicated first, so its raw row count overstates the misses."""
+        cache = ResourceCache(spark, str(tmp_path / "cache"))
+        req = http_request("http://mockapi/entities/7")
+        reqs = requests_to_df(spark, [req, req, http_request("http://mockapi/entities/8")])
+        with pytest.raises(LookupError, match=r"cache_only fetch: 2 request\(s\)"):
+            fetch(reqs, cache, transport=mock_api_transport, cache_only=True, n_requests=3)
+
     def test_cache_only_serves_hits(self, spark, tmp_path):
         cache = ResourceCache(spark, str(tmp_path / "cache"))
         reqs = requests_to_df(spark, [http_request("http://mockapi/entities/7")])
