@@ -69,6 +69,32 @@ def _signature_schema(num_hashes: int) -> T.StructType:
     return T.StructType(fields)
 
 
+def _footer_rows(dirs: list[str], cutoff: float | None) -> int:
+    """Rows in the parquet files of ``dirs``, read from their footers
+    on the driver (no Spark job). With a TTL ``cutoff``, a row group
+    whose ``ingested_at`` maximum is below it holds only expired rows
+    and is not counted. An append stamps one ``ingested_at`` per batch,
+    so this is exact for ``batch-*`` entries and an upper bound on the
+    live rows of a ``compact-*`` one (and for duplicate ids)."""
+    import pyarrow.parquet as pq
+
+    rows = 0
+    for d in dirs:
+        for name in os.listdir(d):
+            if not name.endswith(".parquet") or name.startswith((".", "_")):
+                continue
+            meta = pq.read_metadata(os.path.join(d, name))
+            col = meta.schema.names.index("ingested_at")
+            for g in range(meta.num_row_groups):
+                group = meta.row_group(g)
+                stats = group.column(col).statistics
+                if (cutoff is not None and stats is not None and stats.has_min_max
+                        and stats.max < cutoff):
+                    continue
+                rows += group.num_rows
+    return rows
+
+
 class SignatureStore:
     """On-disk MinHash signature store: ``batch-*``/``compact-*``
     parquet dirs under ``path``, appended atomically, TTL-evicted on
@@ -145,10 +171,10 @@ class SignatureStore:
         os.makedirs(self.path, exist_ok=True)
         token = uuid.uuid4().hex
         staging = os.path.join(self.path, f".staging-{token}")
-        stamped = sigs.select(
-            F.col("id").cast("long"),
-            *[F.col(f"mh_{i}").cast("long") for i in range(self.num_hashes)],
-        ).withColumn("ingested_at", F.lit(float(self.now_fn())))
+        stamped = sigs.selectExpr(
+            "CAST(id AS BIGINT) AS id",
+            *[f"CAST(mh_{i} AS BIGINT) AS mh_{i}" for i in range(self.num_hashes)],
+            f"CAST({float(self.now_fn())!r} AS DOUBLE) AS ingested_at")
         stamped.write.mode("overwrite").parquet(staging)
         os.replace(staging, os.path.join(self.path, f"batch-{token}"))
 
@@ -164,7 +190,14 @@ class SignatureStore:
         old entries are deleted (here or by the next compact). The
         rewrite resolves duplicates latest-wins — the one place the
         store pays a by-id shuffle, amortized over the maintenance
-        cadence instead of every probe."""
+        cadence instead of every probe.
+
+        The latest-wins window runs once, in the write: nothing counts
+        its rows. The output file count comes from the parquet footers
+        of the folded entries (:func:`_footer_rows`, an upper bound on
+        the live rows), and "everything expired" from the footers of
+        the staged write, which then holds no row. Both are driver-side
+        footer reads, no Spark job."""
         import math
 
         from pyspark.sql.window import Window
@@ -172,22 +205,26 @@ class SignatureStore:
         entries = self._entries()  # snapshot BEFORE reading
         if not entries:
             return 0
-        w = Window.partitionBy("id").orderBy(F.desc("ingested_at"))
-        live = (self.read().withColumn("__rn", F.row_number().over(w))
-                .where(F.col("__rn") == 1).drop("__rn"))
-        rows = live.count()
+        cutoff = (None if self.ttl_seconds is None
+                  else float(self.now_fn()) - self.ttl_seconds)
+        bound = _footer_rows(entries, cutoff)
         token = uuid.uuid4().hex
         staging = os.path.join(self.path, f".staging-compact-{token}")
-        if rows == 0:
-            # everything expired: nothing to publish, drop the entries
-            for entry in entries:
-                shutil.rmtree(entry, ignore_errors=True)
-            return len(entries)
-        n_files = max(1, math.ceil(rows / self.target_records_per_file))
-        live.repartition(n_files).write.mode("overwrite") \
-            .option("maxRecordsPerFile", self.target_records_per_file) \
-            .parquet(staging)
-        os.replace(staging, os.path.join(self.path, f"compact-{token}"))
+        written = 0
+        if bound:
+            w = Window.partitionBy("id").orderBy(F.desc("ingested_at"))
+            live = (self.read().withColumn("__rn", F.row_number().over(w))
+                    .where(F.col("__rn") == 1).drop("__rn"))
+            live.repartition(math.ceil(bound / self.target_records_per_file)) \
+                .write.mode("overwrite") \
+                .option("maxRecordsPerFile", self.target_records_per_file) \
+                .parquet(staging)
+            written = _footer_rows([staging], None)
+        if written:
+            os.replace(staging, os.path.join(self.path, f"compact-{token}"))
+        else:
+            # everything expired: nothing to publish
+            shutil.rmtree(staging, ignore_errors=True)
         for entry in entries:
             shutil.rmtree(entry, ignore_errors=True)
         return len(entries)

@@ -1,17 +1,23 @@
-"""Streaming exact deduplication — stateful dropDuplicates over a
-document stream.
+"""Streaming deduplication over a document stream: exact and near-dup.
 
-The streaming twin of ``operators/dedup.exact_dedup``: as document files
-land, each row is keyed by a content hash and only first occurrences
-pass through. State is one 16-byte hash per distinct key, hash-
-partitioned across executors; on an unbounded ingest feed you bound it
-with ``dropDuplicatesWithinWatermark`` on the ingest timestamp —
-exposed via the ``watermark``/``ts_col`` arguments. For backlog drains
+:func:`exact_dedup_stream` is the streaming twin of
+``operators/dedup.exact_dedup``: as document files land, each row is
+keyed by a content hash and only first occurrences pass through. State
+is one 16-byte hash per distinct key, hash-partitioned across
+executors; on an unbounded ingest feed you bound it with
+``dropDuplicatesWithinWatermark`` on the ingest timestamp — exposed via
+the ``watermark``/``ts_col`` arguments. For backlog drains
 (availableNow) the un-watermarked form is the right tool: state lives
-for the drain only.
+for the drain only. Oracle-checked via the `streaming_dedup_exact`
+query: the streamed dedup must reproduce the batch COUNT(DISTINCT text)
+per language.
 
-Oracle-checked via the `streaming_dedup_exact` query: the streamed
-dedup must reproduce the batch COUNT(DISTINCT text) per language.
+:class:`StreamingNearDupIndex` is the streaming twin of
+``operators/dedup.incremental_minhash_dedup``: each micro-batch is
+probed against a MinHash signature store (in memory, or a persisted
+``operators/sigstore.SignatureStore``) whose signatures grow batch by
+batch. Oracle-checked via the `streaming_dedup_incremental` query: the
+streamed verdicts must equal the one-shot batch verdicts.
 """
 
 from __future__ import annotations
@@ -70,6 +76,15 @@ class StreamingNearDupIndex:
     partitions onto the checkpointed state, growing tasks-per-scan
     linearly in batch count — size it to the expected store, like a
     stream's state-store partitioning, whenever the drain is long.
+
+    Width rule: a micro-batch with fewer partitions than the session's
+    ``defaultParallelism`` is hash-partitioned by ``id_col`` to that
+    width before shingling, in both modes. A file-source micro-batch
+    of one small file is a single input split, so its shingle + minhash
+    stage would otherwise run as one task. When the width equals
+    ``spark.sql.shuffle.partitions``, the per-id minhash aggregate
+    reuses this partitioning instead of shuffling again. A batch that
+    is already as wide is left alone.
     """
 
     def __init__(
@@ -115,9 +130,22 @@ class StreamingNearDupIndex:
             df = df.repartition(self.state_partitions)
         return df.localCheckpoint(eager=True)
 
+    def _widened(self, batch_df: DataFrame) -> DataFrame:
+        """``batch_df`` hash-partitioned by ``id_col`` to the session's
+        ``defaultParallelism`` when it has fewer partitions, else
+        unchanged. The partition count comes from the planned RDD,
+        which costs no job for a frame without a shuffle, such as a
+        file-source micro-batch (a bare scan). Under AQE a frame that
+        does shuffle would run its shuffle stages to answer."""
+        width = batch_df.sparkSession.sparkContext.defaultParallelism
+        if batch_df.rdd.getNumPartitions() >= width:
+            return batch_df
+        return batch_df.repartition(width, self.id_col)
+
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         from datagrowth_spark.operators.dedup import incremental_minhash_dedup
 
+        batch_df = self._widened(batch_df)
         if self.sig_store is not None:
             # Persisted mode: the store owns signature state (atomic
             # batch append + TTL/compaction); verdicts materialize via

@@ -1,17 +1,20 @@
 """SignatureStore lifecycle (operators/sigstore.py): atomic appends,
 TTL eviction with an injectable clock, crash-safe compaction, probe
-equivalence, the persisted streaming-index mode, a brute-force
-reference for the store probe and its Spark job budget."""
+equivalence, the persisted streaming-index mode and its micro-batch
+width rule, brute-force references for the MinHash signature and the
+store probe, and the probe's Spark job and driver round-trip budgets."""
 
+import hashlib
 import os
 import random
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
 from datagrowth_spark.operators.dedup import (
-    _banded_keys, incremental_minhash_dedup, incremental_verdicts,
-    minhash_signature)
+    MINHASH_P, _banded_keys, incremental_minhash_dedup, incremental_verdicts,
+    minhash_params, minhash_signature)
 from datagrowth_spark.operators.sigstore import SignatureStore
 
 NH = 8
@@ -108,6 +111,49 @@ class TestCompactVacuum:
         assert store.compact() == 1
         assert store.is_empty()
         assert store.read().count() == 0
+
+    def test_compact_partly_expired_compact_entry(self, spark, tmp_path):
+        """A compact entry mixes ingest times, so its footer statistics
+        only bound the live rows: the rewrite keeps exactly the live
+        ones, and an entry whose footers show every row expired is
+        dropped without a write."""
+        clock = FakeClock(1000.0)
+        store = SignatureStore(spark, str(tmp_path / "s"), num_hashes=NH,
+                               ttl_seconds=150.0, now_fn=clock)
+        store.append(_sigs(spark, _docs(spark, [(1, "first row of the mixed entry")])))
+        clock.t = 1100.0
+        store.append(_sigs(spark, _docs(spark, [(2, "second row of the mixed entry")])))
+        assert store.compact() == 2       # one compact entry, t=1000 and t=1100
+        clock.t = 1200.0                  # row 1 expired, row 2 live
+        store.append(_sigs(spark, _docs(spark, [(3, "a fresh row in its own batch")])))
+        assert store.compact() == 2
+        assert len(store._entries()) == 1
+        raw = spark.read.parquet(*store._entries())
+        assert sorted(r["id"] for r in raw.collect()) == [2, 3]
+        clock.t = 5000.0                  # footers: every row group expired
+        assert store.compact() == 1
+        assert store.is_empty()
+        assert not [n for n in os.listdir(tmp_path / "s") if n.startswith(".staging-")]
+
+    def test_compact_detects_all_expired_from_staged_write(self, spark, tmp_path,
+                                                           monkeypatch):
+        """Footers whose statistics cannot rule the expired rows out
+        (here: statistics ignored) only bound the live rows; the staged
+        write then holds no row, so nothing is published and the
+        entries go."""
+        from datagrowth_spark.operators import sigstore
+
+        footer_rows = sigstore._footer_rows
+        monkeypatch.setattr(sigstore, "_footer_rows",
+                            lambda dirs, cutoff: footer_rows(dirs, None))
+        clock = FakeClock(1000.0)
+        store = SignatureStore(spark, str(tmp_path / "s"), num_hashes=NH,
+                               ttl_seconds=10.0, now_fn=clock)
+        store.append(_sigs(spark, _docs(spark, [(1, "this doomed row text will vanish")])))
+        clock.t = 2000.0
+        assert store.compact() == 1
+        assert store.is_empty()
+        assert not os.listdir(tmp_path / "s")
 
     def test_crash_window_overlap_harmless_then_healed(self, spark, tmp_path):
         """A compact that published but crashed before deleting the
@@ -251,12 +297,112 @@ class TestStreamingPersistedMode:
                    for e in store._entries())
 
 
+WIDTH_ROWS = [(10 + i, f"document {i % 4} shares its words with w{i % 3}") for i in range(12)]
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+class TestMicroBatchWidth:
+    """StreamingNearDupIndex hash-partitions a micro-batch narrower than
+    ``defaultParallelism`` by id before shingling, in both modes."""
+
+    @staticmethod
+    def _drain(spark, tmp_path, monkeypatch, persisted, spy_batch):
+        """Stream one single-file micro-batch through an index over a
+        one-document store; ``spy_batch`` sees the frame the probe gets."""
+        import datagrowth_spark.operators.dedup as dedup_ops
+        from datagrowth_spark.streaming.dedup import StreamingNearDupIndex
+
+        src = str(tmp_path / "src")
+        _docs(spark, WIDTH_ROWS).coalesce(1).write.parquet(src)
+        seed = _sigs(spark, _docs(spark, [(1, WIDTH_ROWS[0][1])])).localCheckpoint(eager=True)
+        if persisted:
+            store = SignatureStore(spark, str(tmp_path / "s"), num_hashes=NH)
+            store.append(seed)
+            index = StreamingNearDupIndex(sig_store=store, bands=4, threshold=0.2)
+            owner, name = store, "ingest"
+        else:
+            index = StreamingNearDupIndex(store_sigs=seed, num_hashes=NH, bands=4,
+                                          threshold=0.2)
+            owner, name = dedup_ops, "incremental_minhash_dedup"
+        probe = getattr(owner, name)
+
+        def spied(batch_df, *args, **kwargs):
+            spy_batch(batch_df)
+            return probe(batch_df, *args, **kwargs)
+
+        monkeypatch.setattr(owner, name, spied)
+        index.start(spark.readStream.schema("doc_id long, text string")
+                    .option("maxFilesPerTrigger", 1).parquet(src)).stop()
+        assert index.batches_processed == 1
+        return sorted(tuple(r) for r in index.verdicts.collect())
+
+    @pytest.mark.parametrize("persisted", [True, False])
+    def test_one_file_batch_widened_to_parallelism(self, spark, tmp_path, monkeypatch,
+                                                   persisted):
+        width = spark.sparkContext.defaultParallelism
+        seen = []
+
+        def spy(batch_df):
+            seen.append((batch_df.rdd.getNumPartitions(),
+                         batch_df._jdf.queryExecution().executedPlan().toString()))
+
+        got = self._drain(spark, tmp_path, monkeypatch, persisted, spy)
+        [(parts, plan)] = seen
+        assert width > 1 and parts == width
+        assert "hashpartitioning(doc_id" in plan, plan
+        assert [r[:3] for r in got if r[0] == 10] == [(10, True, 1)]
+
+    @pytest.mark.parametrize("persisted", [True, False])
+    def test_verdicts_equal_unwidened_run(self, spark, tmp_path, persisted, monkeypatch):
+        from datagrowth_spark.streaming.dedup import StreamingNearDupIndex
+
+        widened = self._drain(spark, tmp_path / "w", monkeypatch, persisted, lambda df: None)
+        monkeypatch.setattr(StreamingNearDupIndex, "_widened", lambda self, df: df)
+        seen = []
+        plain = self._drain(spark, tmp_path / "p", monkeypatch, persisted,
+                            lambda df: seen.append(df.rdd.getNumPartitions()))
+        assert seen == [1]
+        assert widened == plain
+
+    def test_width_check_fires_no_job_and_keeps_wide_batches(self, spark, tmp_path):
+        from datagrowth_spark.streaming.dedup import StreamingNearDupIndex
+
+        width = spark.sparkContext.defaultParallelism
+        src = str(tmp_path / "one-file")
+        _docs(spark, WIDTH_ROWS).coalesce(1).write.parquet(src)
+        index = StreamingNearDupIndex(store_sigs=_sigs(spark, _docs(spark, [(1, "a b c")])),
+                                      num_hashes=NH)
+        narrow = spark.read.parquet(src)
+        widened, jobs = _jobs_in_group(spark, "width-check", lambda: index._widened(narrow))
+        assert jobs == []
+        assert widened.rdd.getNumPartitions() == width
+        wide = _docs(spark, WIDTH_ROWS).repartition(width)
+        assert index._widened(wide) is wide
+
+
 BANDS = 4
 THRESHOLD = 0.5
 #: Spark jobs one SignatureStore.ingest of a small batch into a small
 #: store fires (local[4], 4 shuffle partitions), measured with the
 #: one-pass probe. Per-band re-scans of the signatures raise it to 20.
 INGEST_JOB_BUDGET = 11
+#: Spark jobs one SignatureStore.vacuum of a few small entries fires:
+#: the latest-wins rewrite runs once. Counting its rows first made 6.
+VACUUM_JOB_BUDGET = 3
+#: Driver round trips (py4j commands other than the garbage-collection
+#: deletes, whose timing varies) that building incremental_minhash_dedup
+#: costs, measured with the probe plans built from SQL expression
+#: strings. One Column node per operator made it 3,365.
+PROBE_PY4J_BUDGET = 499
 
 
 def _sig_frame(spark, rows):
@@ -357,20 +503,10 @@ class TestProbeReference:
 
 
 class TestProbeJobs:
-    @staticmethod
-    def _jobs_in_group(spark, group, fn):
-        sc = spark.sparkContext
-        sc.setJobGroup(group, group)
-        try:
-            out = fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return out, list(sc.statusTracker().getJobIdsForGroup(group))
-
     def test_probe_construction_fires_no_jobs(self, spark):
         docs = _docs(spark, [(1, "the quick brown fox jumps over")])
         store_sigs = _sigs(spark, docs).localCheckpoint(eager=True)
-        result, jobs = self._jobs_in_group(
+        result, jobs = _jobs_in_group(
             spark, "probe-construction", lambda: incremental_minhash_dedup(
                 _docs(spark, [(10, "the quick brown fox jumps over")]), store_sigs,
                 num_hashes=NH, bands=BANDS, threshold=0.2))
@@ -384,8 +520,74 @@ class TestProbeJobs:
             (i, f"document {i % 5} body with shared words w{i % 3}") for i in range(20)])))
         batch = _docs(spark, [
             (100 + i, f"document {i % 5} body with shared words w{i % 2}") for i in range(6)])
-        verdicts, jobs = self._jobs_in_group(
+        verdicts, jobs = _jobs_in_group(
             spark, "ingest-budget",
             lambda: store.ingest(batch, bands=BANDS, n=3, threshold=0.2))
         assert len(jobs) <= INGEST_JOB_BUDGET, jobs
         assert verdicts.where("is_dup").count() == 6
+
+    def test_vacuum_within_job_budget(self, spark, tmp_path):
+        store = SignatureStore(spark, str(tmp_path / "s"), num_hashes=NH)
+        for b in range(3):
+            store.append(_sigs(spark, _docs(spark, [
+                (b * 10 + i, f"entry {b} document {i} body text") for i in range(5)])))
+        removed, jobs = _jobs_in_group(spark, "vacuum-budget", store.vacuum)
+        assert removed == 3
+        assert len(jobs) <= VACUUM_JOB_BUDGET, jobs
+        assert store.read().count() == 15
+
+    def test_probe_construction_py4j_budget(self, spark):
+        from py4j import protocol
+        from py4j.clientserver import ClientServerConnection
+
+        docs = _docs(spark, [(i, f"the quick brown fox {i} jumps over") for i in range(6)])
+        store_sigs = _sigs(spark, docs).localCheckpoint(eager=True)
+        calls = []
+        send = ClientServerConnection.send_command
+
+        def counting(conn, command):
+            if not command.startswith(protocol.MEMORY_COMMAND_NAME
+                                      + protocol.MEMORY_DEL_SUBCOMMAND_NAME):
+                calls.append(command)
+            return send(conn, command)
+
+        ClientServerConnection.send_command = counting
+        try:
+            result = incremental_minhash_dedup(docs, store_sigs, num_hashes=NH,
+                                               bands=BANDS, threshold=0.2)
+        finally:
+            ClientServerConnection.send_command = send
+        assert 0 < len(calls) <= PROBE_PY4J_BUDGET, len(calls)
+        assert result.verdicts.where("is_dup").count() == 6
+        result.cleanup()
+
+
+def _py_minhash(text, num_hashes, n):
+    """Pure-Python MinHash: min over the distinct lowercased word
+    n-shingles s of (a_i * h(s) + b_i) mod P, where h(s) is the first 8
+    hex digits of md5(s). Tokens split on the whitespace class of
+    Java's regex ``\\s``. None when the text has fewer than n tokens."""
+    toks = [t for t in re.split(r"[ \t\n\x0b\f\r]+", text.lower()) if t]
+    shingles = {" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)}
+    if not shingles:
+        return None
+    hs = [int(hashlib.md5(s.encode("utf-8")).hexdigest()[:8], 16) for s in shingles]
+    return [min((a * h + b) % MINHASH_P for h in hs)
+            for a, b in map(minhash_params, range(num_hashes))]
+
+
+class TestMinhashReference:
+    def test_signatures_match_pure_python(self, spark):
+        rng = random.Random(11)
+        words = ["Alpha", "beta", "GAMMA", "delta", "eps", "zeta", "Eta", "theta"]
+        seps = [" ", "  ", "\t", "\n", " \r\n "]
+        rows = []
+        for i in range(40):
+            toks = [rng.choice(words) for _ in range(rng.randint(3, 25))]
+            rows.append((i, "".join(t + rng.choice(seps) for t in toks)))
+        rows += [(100, "only two"), (101, "")]   # fewer than n tokens: no row
+        want = {i: _py_minhash(t, 16, 3) for i, t in rows}
+        got = minhash_signature(_docs(spark, rows), "text", "doc_id", num_hashes=16, n=3)
+        assert {r["id"]: [r[f"mh_{k}"] for k in range(16)] for r in got.collect()} == {
+            i: sig for i, sig in want.items() if sig is not None}
+        assert want[100] is None and want[101] is None
