@@ -1,1 +1,2 @@
-"""Kernel utilities with no Spark dependency: config, registry, reach."""
+"""Kernel utilities: config, registry, reach, the session, the
+session cache registry and the on-disk entry lifecycle (``entries``)."""

@@ -5,28 +5,22 @@ maintenance layer for incremental/streaming near-dup detection
 
 Without maintenance the store grows forever: every ingest batch
 appends its signatures, so at 100 TB the probe side scans an
-unbounded, ever-more-fragmented pile of tiny parquet files. This
-module gives the store the same lifecycle ``ResourceCache``
-(``sources/cache.py``) gives the fetch cache:
+unbounded, ever-more-fragmented pile of tiny parquet files. The store
+shares its entry lifecycle with ``ResourceCache`` (``sources/cache.py``):
+both are directories of ``batch-*``/``compact-*`` entries published by
+stage-then-rename and folded by the one compactor in
+``core/entries.py``, which spells the protocol out. What is the
+store's own:
 
-* **append** — one atomic ``batch-<uuid>`` dir per ingest batch,
-  published by stage-then-rename (crash mid-append leaves only a
-  hidden ``.staging-*`` dir that readers never see); safe under
-  concurrent appenders.
-* **TTL eviction** — every appended row is stamped ``ingested_at``
-  (injectable clock, the r8 purge-TTL lesson); ``read()`` filters
-  expired rows out, so eviction is visible immediately, not only
-  after a rewrite.
-* **compact / vacuum** — fold all committed entries into one
-  ``compact-<uuid>`` dir with expired rows dropped and file count
-  bounded (``target_records_per_file``), published by the same
-  stage-then-rename protocol, and only then delete the folded
-  entries. Crash anywhere mid-compact never loses data — worst case
-  both old entries and the new compact dir coexist, which ``read()``
-  tolerates by deduping on id (latest ``ingested_at`` wins) and the
-  next compact removes. ``vacuum()`` additionally sweeps crashed
-  staging dirs (single-writer maintenance, like
-  ``ResourceCache.vacuum``).
+* **append** — stamps every row ``ingested_at`` (injectable clock, the
+  r8 purge-TTL lesson) and commits one ``batch-*`` entry.
+* **TTL eviction** — ``read()`` filters rows older than the TTL
+  cutoff, so eviction is visible immediately, not only after a fold.
+* **compact / vacuum** — the shared fold, latest-wins by ``id`` on
+  ``ingested_at``, sized by the footer rows of the folded entries with
+  row groups entirely past the cutoff not counted
+  (``target_records_per_file``). ``vacuum()`` also sweeps crashed
+  staging dirs.
 
 Probe cost stays FLAT as the store is vacuumed: the probe reads only
 live signature rows (k longs per doc) from a bounded file count, and
@@ -44,21 +38,20 @@ fraction dominates the scan; the r9 in-smoke inversion (34.4 vs
 repeat's 68 s outlier.)
 
 Reference behavior anchor: TTL semantics mirror ``purge_at``
-(``/root/reference/datagrowth/resources/base.py:47-53``); the
-stage-then-rename publish mirrors the engine's ``ResourceCache``.
+(``/root/reference/datagrowth/resources/base.py:47-53``).
 """
 
 from __future__ import annotations
 
-import os
-import shutil
+import functools
 import time
-import uuid
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from datagrowth_spark.core import entries
 
 
 def _signature_schema(num_hashes: int) -> T.StructType:
@@ -69,36 +62,16 @@ def _signature_schema(num_hashes: int) -> T.StructType:
     return T.StructType(fields)
 
 
-def _footer_rows(dirs: list[str], cutoff: float | None) -> int:
-    """Rows in the parquet files of ``dirs``, read from their footers
-    on the driver (no Spark job). With a TTL ``cutoff``, a row group
-    whose ``ingested_at`` maximum is below it holds only expired rows
-    and is not counted. An append stamps one ``ingested_at`` per batch,
-    so this is exact for ``batch-*`` entries and an upper bound on the
-    live rows of a ``compact-*`` one (and for duplicate ids)."""
-    import pyarrow.parquet as pq
-
-    rows = 0
-    for d in dirs:
-        for name in os.listdir(d):
-            if not name.endswith(".parquet") or name.startswith((".", "_")):
-                continue
-            meta = pq.read_metadata(os.path.join(d, name))
-            col = meta.schema.names.index("ingested_at")
-            for g in range(meta.num_row_groups):
-                group = meta.row_group(g)
-                stats = group.column(col).statistics
-                if (cutoff is not None and stats is not None and stats.has_min_max
-                        and stats.max < cutoff):
-                    continue
-                rows += group.num_rows
-    return rows
+#: ``(dirs, cutoff)``: footer rows with row groups wholly ingested
+#: before the TTL cutoff not counted (exact for ``batch-*`` entries,
+#: one ``ingested_at`` per append; an upper bound for ``compact-*``).
+_footer_rows = functools.partial(entries.footer_rows, column="ingested_at")
 
 
 class SignatureStore:
     """On-disk MinHash signature store: ``batch-*``/``compact-*``
-    parquet dirs under ``path``, appended atomically, TTL-evicted on
-    read, folded by :meth:`compact`/:meth:`vacuum`.
+    parquet entries under ``path`` (``core/entries.py``), appended
+    atomically, TTL-evicted on read, folded by :meth:`compact`/:meth:`vacuum`.
 
     ``ttl_seconds=None`` keeps signatures forever (pure compaction
     store); ``now_fn`` injects the clock for deterministic tests.
@@ -116,24 +89,22 @@ class SignatureStore:
         self.now_fn = now_fn or time.time
         self.target_records_per_file = target_records_per_file
 
-    # -- layout ------------------------------------------------------
-
     def _entries(self) -> list[str]:
-        """Committed entry dirs (a crashed append's hidden staging dir
-        doesn't count until its atomic publish)."""
-        try:
-            names = os.listdir(self.path)
-        except FileNotFoundError:
-            return []
-        return sorted(
-            os.path.join(self.path, n) for n in names
-            if (n.startswith("batch-") or n.startswith("compact-"))
-            and os.path.isdir(os.path.join(self.path, n)))
+        return entries.list_entries(self.path)
 
     def is_empty(self) -> bool:
         return not self._entries()
 
     # -- read / append -----------------------------------------------
+
+    def _cutoff(self) -> float | None:
+        return (None if self.ttl_seconds is None
+                else float(self.now_fn()) - self.ttl_seconds)
+
+    def _live(self, snapshot: list[str]) -> DataFrame:
+        df = entries.read(self.spark, snapshot, _signature_schema(self.num_hashes))
+        cutoff = self._cutoff()
+        return df if cutoff is None else df.where(F.col("ingested_at") >= F.lit(cutoff))
 
     def read(self) -> DataFrame:
         """All LIVE signatures (expired rows filtered by the TTL
@@ -149,15 +120,7 @@ class SignatureStore:
         verified matches, and the per-id best-match aggregate is
         idempotent in repeats) and the next :meth:`compact` heals
         them."""
-        entries = self._entries()
-        schema = _signature_schema(self.num_hashes)
-        if not entries:
-            return self.spark.createDataFrame([], schema)
-        df = self.spark.read.schema(schema).parquet(*entries)
-        if self.ttl_seconds is not None:
-            cutoff = float(self.now_fn()) - self.ttl_seconds
-            df = df.where(F.col("ingested_at") >= F.lit(cutoff))
-        return df
+        return self._live(self._entries())
 
     def signatures(self) -> DataFrame:
         """Live signatures WITHOUT the ``ingested_at`` column — the
@@ -166,82 +129,35 @@ class SignatureStore:
         return self.read().drop("ingested_at")
 
     def append(self, sigs: DataFrame) -> None:
-        """Stamp ``ingested_at`` and commit one batch atomically
-        (stage hidden, rename to publish)."""
-        os.makedirs(self.path, exist_ok=True)
-        token = uuid.uuid4().hex
-        staging = os.path.join(self.path, f".staging-{token}")
-        stamped = sigs.selectExpr(
+        """Stamp ``ingested_at`` and commit one ``batch-*`` entry."""
+        entries.append(self.path, sigs.selectExpr(
             "CAST(id AS BIGINT) AS id",
             *[f"CAST(mh_{i} AS BIGINT) AS mh_{i}" for i in range(self.num_hashes)],
-            f"CAST({float(self.now_fn())!r} AS DOUBLE) AS ingested_at")
-        stamped.write.mode("overwrite").parquet(staging)
-        os.replace(staging, os.path.join(self.path, f"batch-{token}"))
+            f"CAST({float(self.now_fn())!r} AS DOUBLE) AS ingested_at"))
 
     # -- maintenance -------------------------------------------------
 
     def compact(self) -> int:
-        """Fold every committed entry into one bounded-file-count
-        ``compact-<uuid>`` dir with expired rows dropped, publish
-        atomically, THEN delete the folded entries. Returns the number
-        of entries removed. Crash-safe at every point: before the
-        rename nothing changed; after it, duplicate coverage (harmless
-        to probes, see :meth:`read`) persists only until the leftover
-        old entries are deleted (here or by the next compact). The
-        rewrite resolves duplicates latest-wins — the one place the
-        store pays a by-id shuffle, amortized over the maintenance
-        cadence instead of every probe.
-
-        The latest-wins window runs once, in the write: nothing counts
-        its rows. The output file count comes from the parquet footers
-        of the folded entries (:func:`_footer_rows`, an upper bound on
-        the live rows), and "everything expired" from the footers of
-        the staged write, which then holds no row. Both are driver-side
-        footer reads, no Spark job."""
-        import math
-
-        from pyspark.sql.window import Window
-
-        entries = self._entries()  # snapshot BEFORE reading
-        if not entries:
+        """Fold every committed entry into one ``compact-*`` entry of
+        live rows, latest ``ingested_at`` per id (``entries.fold``);
+        returns the number of entries removed. The rewrite is the one
+        place the store pays a by-id shuffle, amortized over the
+        maintenance cadence instead of every probe; it runs once, and
+        nothing counts its rows first."""
+        snapshot = self._entries()
+        if not snapshot:
             return 0
-        cutoff = (None if self.ttl_seconds is None
-                  else float(self.now_fn()) - self.ttl_seconds)
-        bound = _footer_rows(entries, cutoff)
-        token = uuid.uuid4().hex
-        staging = os.path.join(self.path, f".staging-compact-{token}")
-        written = 0
-        if bound:
-            w = Window.partitionBy("id").orderBy(F.desc("ingested_at"))
-            live = (self.read().withColumn("__rn", F.row_number().over(w))
-                    .where(F.col("__rn") == 1).drop("__rn"))
-            live.repartition(math.ceil(bound / self.target_records_per_file)) \
-                .write.mode("overwrite") \
-                .option("maxRecordsPerFile", self.target_records_per_file) \
-                .parquet(staging)
-            written = _footer_rows([staging], None)
-        if written:
-            os.replace(staging, os.path.join(self.path, f"compact-{token}"))
-        else:
-            # everything expired: nothing to publish
-            shutil.rmtree(staging, ignore_errors=True)
-        for entry in entries:
-            shutil.rmtree(entry, ignore_errors=True)
-        return len(entries)
+        live = entries.latest_wins(self._live(snapshot), "id", "ingested_at")
+        return entries.fold(self.path, snapshot, live,
+                            _footer_rows(snapshot, self._cutoff()),
+                            self.target_records_per_file)
 
     def vacuum(self) -> int:
         """Compact + sweep crashed-append/compact staging dirs.
         Single-writer maintenance (a hidden staging dir could be a
         concurrent appender's in-flight stage — do not race them);
         returns the number of folded entries."""
-        if not os.path.exists(self.path):
-            return 0
-        removed = self.compact()
-        for name in os.listdir(self.path):
-            if name.startswith(".staging-"):
-                shutil.rmtree(os.path.join(self.path, name),
-                              ignore_errors=True)
-        return removed
+        return entries.vacuum(self.path, self.compact)
 
     # -- ingest convenience ------------------------------------------
 

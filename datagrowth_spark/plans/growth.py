@@ -338,16 +338,16 @@ class GrowthProcessor:
         try:
             fetch_kwargs = {"transport": self.transport} if self.transport else {}
             # return_responses=False: the join-back below keeps only
-            # this batch's signatures (left join on signature), so
-            # fetch's own result semi-join — and the signature-frame
-            # localCheckpoint job that feeds it — would repeat that
-            # filter (r13: one join instead of two; fewer driver jobs
-            # per grow cycle). The join does NOT restrict the cache
-            # scan: cache.latest() is unpruned here, so its scan and
-            # latest-wins window cover the whole cache on every cycle
-            # (the pruned point lookup fetch can do is not used).
-            # Misses are appended to the cache inside the call, so the
-            # pages are committed before latest() is planned.
+            # this batch's signatures, so fetch's own result lookup —
+            # and the signature-frame localCheckpoint job that feeds
+            # it — would repeat that work (r13: one lookup instead of
+            # two; fewer driver jobs per grow cycle). The join-back
+            # reads the cache through latest(signatures=), which
+            # semi-joins the batch's signatures into the scan below the
+            # latest-wins window, so the window covers only this
+            # batch's rows, not the whole cache. Misses are appended to
+            # the cache inside the call, so the pages are committed
+            # before latest() is planned.
             fetch(requests.select([f.name for f in REQUEST_SCHEMA.fields]),
                   cache, return_responses=False, **fetch_kwargs)
             # Two strings per pending document — the minimal state the
@@ -355,7 +355,7 @@ class GrowthProcessor:
             id_sig = requests.select("identity", "signature").localCheckpoint(eager=True)
         finally:
             requests.unpersist()
-        joined = id_sig.join(cache.latest(), "signature", "left")
+        joined = id_sig.join(cache.latest(signatures=id_sig), "signature", "left")
         contributions = self._extract_contributions(joined)
 
         phase = self.phase

@@ -12,11 +12,12 @@ replays, retries and overlapping pipelines never refetch.
                           result is returned — side-effect idempotence,
                           the reference's close-before-yield rule)
 
-Scale design: the cache table is parquet partitioned by signature
-prefix; the lookup is a join on a 64-char key (broadcast when the
-request side is small); the fetch worker is Arrow-batched with
-per-partition rate limiting, so N executors give N-way polite
-parallelism against the source.
+Scale design: the cache table is a directory of flat parquet entries
+(``core/entries.py``); every lookup semi-joins the request signatures
+into the scan BELOW the latest-wins window (:meth:`ResourceCache.latest`),
+so the window only sorts the requested signatures' rows; the fetch
+worker is Arrow-batched with per-partition rate limiting, so N
+executors give N-way polite parallelism against the source.
 
 Nothing in Catalyst memoizes across runs — this operator is the piece
 the reference got right and Spark lacks; everything else in the engine
@@ -26,13 +27,14 @@ is plain DataFrame algebra.
 from __future__ import annotations
 
 import json
-import os
 import time
 from typing import Any, Callable, Iterator
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from datagrowth_spark.core import entries
 
 REQUEST_SCHEMA = T.StructType([
     T.StructField("signature", T.StringType(), False),
@@ -69,22 +71,8 @@ RETRY_STATUSES = (420, 429, 502, 503, 504)
 Transport = Callable[[str, str, dict, Any], tuple[int, dict, str]]
 """(method, url, headers, data) -> (status, response_headers, body)"""
 
-#: Up to this many requests per fetch call, the signature set is
-#: collected driver-side (tiny: 64-char strings) so both cache scans
-#: become partition-pruned point lookups instead of full-table scans.
-#: Above it, the lookup stays a join — no driver structure may scale
-#: with the crawl size, and past a few thousand signatures the 256
-#: sig_prefix partitions are saturated (no listing-level pruning left)
-#: while the literal isin() still bloats Catalyst time.
-FETCH_PRUNE_THRESHOLD = 4096
-
-#: A flat (never-compacted) cache with at least this many committed
-#: batch dirs still benefits from the pushed ``signature IN`` predicate
-#: even without partition pruning: below it, the probe job plus the
-#: isin() literals cost more than the tiny scan they save (measured
-#: 2.4x on many-small-fetch growth chains); above it, an unpruned hit
-#: lookup windows over the entire multi-dir cache every fetch.
-FLAT_PRUNE_MIN_DIRS = 32
+#: Rows per compacted cache file (about 0.5 GB at a 2 KB body).
+COMPACT_RECORDS_PER_FILE = 250_000
 
 
 def success_predicate(status: Column | str = "status") -> Column:
@@ -124,47 +112,34 @@ def shell_transport(method: str, url: str, headers: dict, data: Any) -> tuple[in
         return STATUS_TIMEOUT, {}, ""
 
 
-def _sig_prefix(sig: str) -> str:
-    """Partition value for one signature: 'p' + first 2 hex chars. The
-    letter prefix pins parquet partition-value inference to STRING (an
-    all-numeric partition set would otherwise infer int and break
-    cross-dir schema unification)."""
-    return "p" + sig[:2]
-
-
 class ResourceCache:
     """Persistent response cache over a parquet directory.
 
-    Layout: each append commits as its own ``batch-<uuid>`` subdirectory,
-    published by an ATOMIC rename of a hidden staging dir. Concurrent
-    appenders (two fetch jobs in one session, or two crawler drivers on a
-    shared cache) therefore never share a ``_temporary`` dir — the classic
-    same-path parquet-append hazard where one job's commit cleanup deletes
-    the other's staged task files. A crashed append leaves only a hidden
-    ``.staging-*`` dir (invisible to readers); :meth:`vacuum` sweeps those.
+    Layout and lifecycle are the shared entry protocol of
+    ``core/entries.py``: each append commits as its own ``batch-<uuid>``
+    entry, published by an ATOMIC rename of a hidden staging dir, so
+    concurrent appenders (two fetch jobs in one session, or two crawler
+    drivers on a shared cache) never share a ``_temporary`` dir, and a
+    crashed append leaves only a hidden ``.staging-*`` dir that
+    :meth:`vacuum` sweeps.
 
-    A month-long crawl accumulates thousands of tiny batch dirs and every
-    read re-lists and re-scans all of them; :meth:`compact` periodically
-    folds all committed entries into ONE ``compact-<uuid>`` dir
-    hash-partitioned by signature prefix (``sig_prefix=pXX``, 256
-    buckets), published by the same stage-then-rename protocol, and only
-    then deletes the entries it folded. Crash anywhere mid-compact never
-    loses data: before the publish only a hidden staging dir exists;
-    after it, not-yet-deleted old entries merely duplicate rows that
-    :meth:`latest` dedups and the next compact removes. Compaction is
-    safe to race APPENDERS (it folds a snapshot of the entry list taken
-    up front; batches published later survive untouched); a READER
-    holding a pre-compaction DataFrame should re-plan via a fresh
-    :meth:`read` after compaction, like any parquet dataset whose files
-    were rewritten underneath a cached listing.
+    A month-long crawl accumulates thousands of small batch dirs, and
+    every read re-lists and re-scans all of them; :meth:`compact`
+    periodically folds all committed entries into ONE flat
+    ``compact-<uuid>`` entry of latest-wins live rows, sized from the
+    parquet footers. Crash anywhere mid-compact never loses data, and
+    compaction is safe to race APPENDERS (see ``core/entries.py``); a
+    READER holding a pre-compaction DataFrame should re-plan via a
+    fresh :meth:`read` after compaction, like any parquet dataset whose
+    files were rewritten underneath a cached listing. ``vacuum`` is
+    single-writer maintenance — do not run it concurrently with
+    appenders or another compactor.
 
-    The partitioned layout is what makes signature lookups prune: a
-    driver-bounded signature list (:meth:`read`/:meth:`latest` with
-    ``prune_signatures``) turns into a partition filter on ``sig_prefix``
-    plus a pushed ``signature IN`` — a fetch of 1k requests against a
-    billion-row cache scans ~1k/256 of the compacted partitions instead
-    of the whole table. ``vacuum`` remains single-writer maintenance —
-    do not run it concurrently with appenders or another compactor.
+    Lookups take a signature FRAME, not a driver list:
+    ``latest(signatures=frame)`` semi-joins it into the scan below the
+    latest-wins window, which is exact because the window partitions
+    by signature. The cost is the requested rows' window, with no
+    driver probe and no layout or size gate.
     """
 
     def __init__(self, spark: SparkSession, path: str,
@@ -188,177 +163,59 @@ class ResourceCache:
         filesystem check (no job), used to skip the hit-lookup join on
         the cold path. Staging dirs are hidden, so a mid-flight append
         doesn't count until its atomic publish."""
-        return not os.path.exists(self.path) or not any(
-            not n.startswith((".", "_")) for n in os.listdir(self.path)
-        )
+        return not entries.list_entries(self.path)
 
-    def has_compacted(self) -> bool:
-        """True when a ``compact-*`` partitioned layout exists (pure
-        listdir, no job). Delegates to :meth:`_entries` so there is ONE
-        source of truth for layout classification — a stray
-        non-directory ``compact-*`` entry counts as flat everywhere."""
-        return bool(self._entries()[0])
-
-    def wants_pruned_lookups(self) -> bool:
-        """True when a signature-pruned lookup pays for its driver
-        probe: either a compacted layout exists (partition pruning +
-        pushed predicate), or the flat cache has accumulated enough
-        batch dirs (``FLAT_PRUNE_MIN_DIRS``) that the pushed
-        ``signature IN`` beats windowing over the whole multi-dir scan
-        even without partition pruning. Small fresh caches — the
-        many-small-fetch growth-chain shape — skip the probe entirely."""
-        compacted, flat = self._entries()
-        return bool(compacted) or len(flat) >= FLAT_PRUNE_MIN_DIRS
-
-    def _entries(self) -> tuple[list[str], list[str]]:
-        """Committed entries, split by layout: (partitioned compact dirs,
-        flat batch dirs / legacy loose files)."""
-        if not os.path.exists(self.path):
-            return [], []
-        compacted, flat = [], []
-        for name in sorted(os.listdir(self.path)):
-            if name.startswith((".", "_")):
-                continue
-            full = os.path.join(self.path, name)
-            if name.startswith("compact-") and os.path.isdir(full):
-                compacted.append(full)
-            else:
-                flat.append(full)
-        return compacted, flat
-
-    def _scan(self, compacted: list[str], flat: list[str],
-              prune_signatures: list[str] | None = None) -> DataFrame:
-        """Union of the two layouts' scans. With ``prune_signatures``
-        the compacted scan gets a PARTITION filter on ``sig_prefix``
-        (listing-level pruning) and both sides get the pushed
-        ``signature IN`` predicate."""
-        fields = [f.name for f in RESPONSE_SCHEMA.fields]
-        sig_filter = None
-        if prune_signatures is not None:
-            sig_filter = F.col("signature").isin(list(prune_signatures))
-        parts = []
-        if flat:
-            df = self.spark.read.option("recursiveFileLookup", "true") \
-                .parquet(*flat)
-            # Forward-compat: caches written before the chain column
-            # existed read back with chain = own signature.
-            if "chain" not in df.columns:
-                df = df.withColumn("chain", F.col("signature"))
-            if sig_filter is not None:
-                df = df.where(sig_filter)
-            parts.append(df.select(fields))
-        if compacted:
-            df = self.spark.read.parquet(*compacted)
-            if prune_signatures is not None:
-                prefixes = sorted({_sig_prefix(s) for s in prune_signatures})
-                df = df.where(F.col("sig_prefix").isin(prefixes) & sig_filter)
-            parts.append(df.select(fields))  # drops sig_prefix
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    def read(self, prune_signatures: list[str] | None = None) -> DataFrame:
-        """All live (non-expired) cached responses. ``prune_signatures``
-        — a driver-bounded signature list — narrows the scan to those
-        rows AND prunes compacted partitions by signature prefix; chain
-        lookups (matching ``chain`` of rows whose own signature is
-        unknown) must scan unpruned."""
-        compacted, flat = self._entries()
-        if not compacted and not flat:
-            return self.spark.createDataFrame([], RESPONSE_SCHEMA)
-        df = self._scan(compacted, flat, prune_signatures)
+    def _live(self, snapshot: list[str]) -> DataFrame:
+        df = entries.read(self.spark, snapshot, RESPONSE_SCHEMA)
+        # Forward-compat: rows written before the chain column existed
+        # read back with chain = own signature.
+        df = df.withColumn("chain", F.coalesce("chain", "signature"))
         # TTL purge predicate (reference: purge_at checked on every
         # validate_request, resources/base.py:47-53).
         return df.where(F.col("purge_at").isNull() | (F.col("purge_at") > self._now_expr()))
 
+    def read(self) -> DataFrame:
+        """All live (non-expired) cached responses."""
+        return self._live(entries.list_entries(self.path))
+
     def append(self, responses: DataFrame) -> None:
         """Commit one response batch atomically (stage hidden, rename to
         publish) — safe under concurrent appenders, see class docstring."""
-        import uuid
+        entries.append(self.path, responses.select(
+            [F.col(f.name).cast(f.dataType) for f in RESPONSE_SCHEMA.fields]))
 
-        os.makedirs(self.path, exist_ok=True)
-        token = uuid.uuid4().hex
-        staging = os.path.join(self.path, f".staging-{token}")
-        responses.select([f.name for f in RESPONSE_SCHEMA.fields]) \
-            .write.mode("overwrite").parquet(staging)
-        os.replace(staging, os.path.join(self.path, f"batch-{token}"))
+    def latest(self, signatures: DataFrame | None = None) -> DataFrame:
+        """One row per signature (most recent live fetch wins). With a
+        ``signatures`` frame (a ``signature`` column), only those
+        signatures, semi-joined into the scan below the window."""
+        df = self.read()
+        if signatures is not None:
+            df = df.join(signatures.select("signature"), "signature", "left_semi")
+        return entries.latest_wins(df, "signature", "fetched_at")
 
-    def latest(self, prune_signatures: list[str] | None = None) -> DataFrame:
-        """One row per signature (most recent fetch wins)."""
-        from pyspark.sql.window import Window
-
-        df = self.read(prune_signatures)
-        w = Window.partitionBy("signature").orderBy(F.desc("fetched_at"))
-        return df.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") == 1).drop("__rn")
-
-    def compact(self, latest_only: bool = False) -> int:
-        """Fold every committed entry into one signature-prefix-
-        partitioned ``compact-*`` dir, dropping expired rows (and, with
-        ``latest_only``, superseded fetches of re-fetched signatures).
-        Returns the number of old entries removed. Safe to race
-        appenders; see the class docstring for the crash/read story.
-        (The flat-dataset analogue lives in files.compact_parquet; the
-        cache needs the partitioned layout for pruned lookups, so it
-        compacts itself.)"""
-        import shutil
-        import uuid
-
-        compacted, flat = self._entries()  # snapshot BEFORE reading
-        entries = compacted + flat
-        if not entries:
+    def compact(self) -> int:
+        """Fold every committed entry into one flat ``compact-*`` entry
+        of live rows, one per signature (most recent fetch wins), and
+        return the number of entries removed (``entries.fold``). A
+        superseded fetch is gone after the fold, so an expiring newest
+        row no longer uncovers an older one: a folded signature is
+        re-fetched, as in the reference, which keeps one resource per
+        request."""
+        snapshot = entries.list_entries(self.path)
+        if not snapshot:
             return 0
-        df = self._scan(compacted, flat).where(
-            F.col("purge_at").isNull()
-            | (F.col("purge_at") > self._now_expr()))
-        if latest_only:
-            from pyspark.sql.window import Window
+        live = entries.latest_wins(self._live(snapshot), "signature", "fetched_at")
+        return entries.fold(self.path, snapshot, live, entries.footer_rows(snapshot),
+                            COMPACT_RECORDS_PER_FILE)
 
-            w = Window.partitionBy("signature").orderBy(F.desc("fetched_at"))
-            df = (df.withColumn("__rn", F.row_number().over(w))
-                  .where(F.col("__rn") == 1).drop("__rn"))
-        df = df.withColumn(
-            "sig_prefix", F.concat(F.lit("p"), F.substring("signature", 1, 2)))
-        token = uuid.uuid4().hex
-        staging = os.path.join(self.path, f".staging-compact-{token}")
-        # One file per occupied partition: repartition on the partition
-        # column so each write task owns whole prefixes.
-        df.repartition("sig_prefix").write.mode("overwrite") \
-            .partitionBy("sig_prefix").parquet(staging)
-        if not any(n.startswith("sig_prefix=") for n in os.listdir(staging)):
-            # Everything was expired: nothing to publish, just drop the
-            # old entries and the empty staging dir.
-            shutil.rmtree(staging, ignore_errors=True)
-        else:
-            os.replace(staging, os.path.join(self.path, f"compact-{token}"))
-        for entry in entries:
-            if os.path.isdir(entry):
-                shutil.rmtree(entry, ignore_errors=True)
-            else:
-                try:
-                    os.unlink(entry)
-                except OSError:
-                    pass
-        return len(entries)
-
-    def vacuum(self) -> None:
+    def vacuum(self) -> int:
         """Compact (dropping expired rows) and sweep crashed-append/
-        crashed-compact staging dirs. Single-writer maintenance: unlike
-        bare :meth:`compact` this also deletes hidden staging dirs,
-        which could be another writer's in-flight stage — do not run
-        concurrently with appenders or compactors. Crash-safe: the
-        rewrite publishes via the same stage-then-rename protocol, so
-        the old data stays intact until the new copy is committed
-        (ADVICE r5 — the old in-place overwrite lost the whole cache on
-        a mid-vacuum crash)."""
-        import shutil
-
-        if not os.path.exists(self.path):
-            return
-        self.compact()
-        for name in os.listdir(self.path):
-            if name.startswith(".staging-"):
-                shutil.rmtree(os.path.join(self.path, name), ignore_errors=True)
+        crashed-compact staging dirs; returns the number of folded
+        entries. Single-writer maintenance: unlike bare :meth:`compact`
+        this also deletes hidden staging dirs, which could be another
+        writer's in-flight stage — do not run concurrently with
+        appenders or compactors."""
+        return entries.vacuum(self.path, self.compact)
 
 
 def _fetch_worker(
@@ -498,23 +355,6 @@ def fetch(
         requests_df = requests_df.select(req_fields) \
             .dropDuplicates(["signature"]).persist()
     try:
-        # Driver-bounded request batches collect their signature set
-        # once so the two cache scans below — hit lookup and final
-        # result — prune to the matching sig_prefix partitions instead
-        # of scanning the whole cache table. GATED on the lookup paying
-        # for itself (compacted layout, or a flat cache grown past
-        # FLAT_PRUNE_MIN_DIRS): on a fresh flat cache pruning
-        # eliminates nothing, while the probe job plus a
-        # thousands-of-literals isin() at Catalyst time cost real
-        # seconds per fetch (measured 2.4x on the many-small-fetch
-        # growth chain). The LIMIT probe caps driver memory for huge
-        # seed frames, which fall back to the join path either way.
-        prune_sigs = None
-        if cache.wants_pruned_lookups():
-            probe = (requests_df.select("signature")
-                     .limit(FETCH_PRUNE_THRESHOLD + 1).collect())
-            prune_sigs = ([r["signature"] for r in probe]
-                          if len(probe) <= FETCH_PRUNE_THRESHOLD else None)
         # Only SUCCESSFUL cached responses count as hits (reference
         # generic.py:133-135: a cached resource is returned only when
         # resource.success; failures are re-sent). Otherwise a transient
@@ -528,18 +368,14 @@ def fetch(
             # skip the hit-lookup join (and its latest() window) entirely.
             misses = requests_df.persist()
         else:
-            hit_src = cache.latest(prune_signatures=prune_sigs)
+            hits = cache.latest(signatures=requests_df)
             if not cache_only:
-                hit_src = hit_src.where(success_predicate())
-            cached = hit_src.select("signature").withColumn("__hit", F.lit(True))
+                hits = hits.where(success_predicate())
             # Persisted: consumed by the count below AND the fetch job —
             # without it the cache anti-join (and any Python request lineage
             # above the persist boundary) runs twice per fetch call.
-            misses = (
-                requests_df.join(cached, "signature", "left")
-                .where(F.col("__hit").isNull())
-                .drop("__hit")
-            ).persist()
+            misses = requests_df.join(hits.select("signature"), "signature",
+                                      "left_anti").persist()
         extra_sigs: list = []
         try:
             # Cold path with a driver-known count of unique requests:
@@ -589,21 +425,14 @@ def fetch(
             misses.unpersist()  # append() consumed it eagerly
         if not return_responses:
             return None
-        if prune_sigs is not None:
-            # Pruned point lookup: the signature set IS the filter, so
-            # the result needs no semi-join at all — the cache scan
-            # reads only the matching sig_prefix partitions (plus any
-            # not-yet-compacted batch dirs).
-            return cache.latest(
-                prune_signatures=sorted(set(prune_sigs) | set(extra_sigs)))
-        sigs = requests_df.select("signature").dropDuplicates(["signature"])
+        sigs = requests_df.select("signature")
         if extra_sigs:
-            spark_local = spark.createDataFrame([(s,) for s in set(extra_sigs)], "signature string")
-            sigs = sigs.unionByName(spark_local).dropDuplicates(["signature"])
+            sigs = sigs.unionByName(spark.createDataFrame(
+                [(s,) for s in set(extra_sigs)], "signature string"))
         # Eager snapshot of the (tiny: signatures only) frame so the
         # request-building lineage and its persisted RDD can be released
-        # now instead of leaking until executor storage evicts them.
-        sigs = sigs.localCheckpoint(eager=True)
-        return cache.latest().join(sigs, "signature", "left_semi")
+        # now instead of leaking until executor storage evicts them. A
+        # semi-join needs no distinct right side.
+        return cache.latest(signatures=sigs.localCheckpoint(eager=True))
     finally:
         requests_df.unpersist()

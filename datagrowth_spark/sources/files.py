@@ -197,30 +197,6 @@ def write_range_sorted(df: DataFrame, path: str, sort_cols: list[str],
     ranged.sortWithinPartitions(*sort_cols).write.mode(mode).parquet(path)
 
 
-def compact_parquet(spark, path: str, target_records_per_file: int,
-                    dest: str | None = None) -> int:
-    """Small-files compaction: rewrite a parquet dataset into files of
-    ~``target_records_per_file`` rows; returns the new file count.
-
-    Streaming sinks and per-batch appends accumulate thousands of tiny
-    files; at 100 TB the scan's task-scheduling overhead and the
-    NameNode/object-store listing dominate. Repartitioning to
-    ceil(rows/target) tasks bounds both file count and file size; with
-    ``dest`` unset the rewrite lands beside the source at
-    ``<path>__compacted`` (atomic-rename promotion is the caller's
-    choice — never overwrite the input mid-read).
-    """
-    import math
-
-    df = spark.read.parquet(path)
-    rows = df.count()
-    n_files = max(1, math.ceil(rows / target_records_per_file))
-    dest = dest or path.rstrip("/") + "__compacted"
-    df.repartition(n_files).write.mode("overwrite") \
-        .option("maxRecordsPerFile", target_records_per_file).parquet(dest)
-    return n_files
-
-
 def add_zorder_key(
     df: DataFrame,
     cols: list[str],

@@ -266,7 +266,7 @@ def paginated_fetch(
         # beats materializing a join side (no shuffle, no broadcast).
         return cache.latest().where(F.col("signature").isin(list(result_sigs)))
     sigs = spark.createDataFrame([(s,) for s in result_sigs], "signature string")
-    return cache.latest().join(sigs, "signature", "left_semi")
+    return cache.latest(signatures=sigs)
 
 
 def _paginated_fetch_relational(
@@ -307,10 +307,10 @@ def _paginated_fetch_relational(
 
     if next_request is None:
         # No pagination: one fetch, then a relational semi-join on the
-        # request signatures.
-        sigs = requests_df.select("signature").dropDuplicates(["signature"])
+        # request signatures (no distinct needed on a semi-join side).
+        sigs = requests_df.select("signature")
         fetch(requests_df, cache, return_responses=False, **fetch_kwargs)
-        return cache.latest().join(sigs, "signature", "left_semi")
+        return cache.latest(signatures=sigs)
 
     cursors = (
         requests_df.select(req_cols).dropDuplicates(["signature"])
@@ -427,4 +427,4 @@ def _paginated_fetch_relational(
     sigs = (spark.read.parquet(scratch)
             .dropDuplicates(["signature"]).localCheckpoint(eager=True))
     shutil.rmtree(scratch, ignore_errors=True)
-    return cache.latest().join(sigs, "signature", "left_semi")
+    return cache.latest(signatures=sigs)

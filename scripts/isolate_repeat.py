@@ -10,6 +10,14 @@ repeats each. Prints one JSON line per op with all repeats + median.
 Run: SPARK_GRAFT_DRIVER_MEM=48g python scripts/isolate_repeat.py \
          [rows_millions] [repeats] [op ...]
 Ops: token_budget_select budget_threshold_rank_free
+
+Self-timing ops build their own state once and print their own lines:
+``sigstore_probe_pair``; ``cache_lookup_pair`` (an N-row response cache
+in 40 batch dirs: a 500-request all-hit fetch and a growth-style
+join-back, before and after ``ResourceCache.compact()``, with the cache
+bytes); ``harvest_history`` (the perfbench ``harvest_fresh`` driver for
+14 cycles with ``compact()`` after cycle 10: per-cycle seconds and
+Spark jobs; rows and repeats are ignored).
 """
 
 from __future__ import annotations
@@ -47,6 +55,15 @@ def main() -> None:
             .cast("long").alias("n_tokens"),
         )
     )
+
+    def _timed(fn):
+        fn()  # warmup, discarded
+        times = []
+        for _ in range(repeats):
+            t0 = time.time()
+            fn()
+            times.append(round(time.time() - t0, 2))
+        return times
 
     def run_exact_dedup_groupby():
         from datagrowth_spark.operators.dedup import exact_dedup
@@ -128,17 +145,115 @@ def main() -> None:
         for phase in ("pre_vacuum", "post_vacuum"):
             if phase == "post_vacuum":
                 store.vacuum()
-            probe()  # warmup, discarded
-            times = []
-            for _ in range(repeats):
-                t0 = time.time()
-                probe()
-                times.append(round(time.time() - t0, 2))
+            times = _timed(probe)
             print(json.dumps({"op": f"sigstore_probe_{phase}", "rows": n,
                               "unit": "sec", "repeats": times,
                               "median": statistics.median(times)}),
                   flush=True)
         _shutil.rmtree(sig_dir, ignore_errors=True)
+
+    def run_cache_lookup_pair():
+        """Lookups against an N-row cache: the flat 40-batch-dir crawl
+        layout, then the same cache after one compact()."""
+        import shutil as _shutil
+        import tempfile as _tempfile
+
+        from datagrowth_spark.sources.cache import ResourceCache, fetch
+        from perfbench.common import dir_bytes
+
+        def never_called(method, url, headers, data):
+            raise AssertionError(f"all-hit fetch sent {url}")
+
+        cache_dir = _tempfile.mkdtemp(prefix="cache-isolate-")
+        cache = ResourceCache(spark, os.path.join(cache_dir, "c"))
+
+        def rows(ids):
+            sig = F.sha2(F.col("id").cast("string"), 256)
+            return ids.select(
+                sig.alias("signature"), F.lit("GET").alias("method"),
+                F.concat(F.lit("http://api.bench/entities/"), F.col("id").cast("string"))
+                .alias("url"),
+                F.lit(None).cast("string").alias("headers"),
+                F.lit(None).cast("string").alias("data"),
+                F.lit(200).alias("status"), F.lit("{}").alias("head"),
+                F.concat(F.lit('{"id": '), F.col("id").cast("string"),
+                         F.lit(', "name": "entity '), F.col("id").cast("string"),
+                         F.lit('", "detail": "'), F.repeat(F.lit("x"), 120),
+                         F.lit('"}')).alias("body"),
+                (F.current_timestamp() - F.make_interval(secs=F.col("id"))).alias("fetched_at"),
+                F.lit(None).cast("timestamp").alias("purge_at"),
+                sig.alias("chain"))
+
+        chunk = -(-n // 40)
+        for b in range(40):
+            cache.append(rows(spark.range(b * chunk, min((b + 1) * chunk, n))))
+        picked = spark.range(0, n, max(1, n // 500)).limit(500)
+        reqs = rows(picked).select("signature", "method", "url", "headers", "data") \
+            .localCheckpoint(eager=True)
+        id_sig = reqs.select(F.col("url").alias("identity"), "signature") \
+            .localCheckpoint(eager=True)
+
+        def fetch_all_hit():
+            fetch(reqs, cache, transport=never_called, backoff_delays=[]) \
+                .write.format("noop").mode("overwrite").save()
+
+        def join_back():
+            id_sig.join(cache.latest(signatures=id_sig), "signature", "left") \
+                .write.format("noop").mode("overwrite").save()
+
+        for phase in ("flat", "compacted"):
+            extra = {}
+            if phase == "compacted":
+                t0 = time.time()
+                extra["entries_folded"] = cache.compact()
+                extra["compact_s"] = round(time.time() - t0, 2)
+            extra["cache_bytes"] = dir_bytes(cache.path)
+            for name, fn in (("fetch_all_hit", fetch_all_hit), ("join_back", join_back)):
+                times = _timed(fn)
+                print(json.dumps({"op": f"cache_lookup_{name}_{phase}", "rows": n,
+                                  "unit": "sec", "repeats": times,
+                                  "median": statistics.median(times), **extra}),
+                      flush=True)
+        _shutil.rmtree(cache_dir, ignore_errors=True)
+
+    def run_harvest_history(cycles=14, compact_after=10, seed=5):
+        """Grow cost against cache history: the perfbench harvest driver
+        with one compact() of its cache after cycle ``compact_after``."""
+        import shutil as _shutil
+        import tempfile as _tempfile
+
+        from perfbench.common import dir_bytes
+        from perfbench.harvest import HarvestFresh
+
+        run_dir = _tempfile.mkdtemp(prefix="harvest-history-")
+        harvest = HarvestFresh(spark, run_dir, seed)
+        sc = spark.sparkContext
+        per_cycle = []
+        for cycle in range(1, cycles + 1):
+            group = f"harvest-history-{cycle}"
+            sc.setJobGroup(group, group)
+            try:
+                [sec], _docs = harvest.step()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+            per_cycle.append(sec)
+            print(json.dumps({"op": "harvest_history", "cycle": cycle, "sec": round(sec, 2),
+                              "jobs": jobs, "cache_bytes": dir_bytes(harvest.cache_dir)}),
+                  flush=True)
+            if cycle == compact_after:
+                t0 = time.time()
+                folded = harvest.cache.compact()
+                print(json.dumps({"op": "harvest_history_compact", "after_cycle": cycle,
+                                  "entries_folded": folded,
+                                  "sec": round(time.time() - t0, 2),
+                                  "cache_bytes": dir_bytes(harvest.cache_dir)}), flush=True)
+        before = statistics.median(per_cycle[compact_after - 4:compact_after])
+        after = statistics.median(per_cycle[compact_after:compact_after + 4])
+        print(json.dumps({"op": "harvest_history_summary", "seed": seed,
+                          "median_before": round(before, 2), "median_after": round(after, 2),
+                          "ratio": round(after / before, 3)}), flush=True)
+        _shutil.rmtree(run_dir, ignore_errors=True)
 
     _clf_cache: list = []
 
@@ -157,6 +272,8 @@ def main() -> None:
 
     runners = {
         "sigstore_probe_pair": run_sigstore_probe_pair,
+        "cache_lookup_pair": run_cache_lookup_pair,
+        "harvest_history": run_harvest_history,
         "clf_join_1024": lambda: _clf_carrier(1024, True),
         "clf_join_8192": lambda: _clf_carrier(8192, True),
         "clf_map_4096": lambda: _clf_carrier(4096, False),
@@ -173,17 +290,13 @@ def main() -> None:
         "unigram_train_k1": lambda: _unigram(1),
         "unigram_train_k2": lambda: _unigram(2),
     }
+    self_timing = {"sigstore_probe_pair", "cache_lookup_pair", "harvest_history"}
     for op in ops:
         fn = runners[op]
-        if op == "sigstore_probe_pair":
-            fn()  # self-timing: builds the store once, prints both lines
+        if op in self_timing:
+            fn()  # builds its state once, prints its own lines
             continue
-        fn()  # warmup, discarded
-        times = []
-        for _ in range(repeats):
-            t0 = time.time()
-            fn()
-            times.append(round(time.time() - t0, 2))
+        times = _timed(fn)
         print(json.dumps({"op": op, "rows": n, "unit": "sec",
                           "repeats": times,
                           "median": statistics.median(times)}), flush=True)

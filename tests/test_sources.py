@@ -28,6 +28,7 @@ from datagrowth_spark.sources.signatures import (
 )
 
 from mock_transports import PAGE_SIZE, TOTAL, mock_api_transport  # noqa: E402
+from test_sigstore import _jobs_in_group  # noqa: E402
 
 
 class TestSignatures:
@@ -606,20 +607,6 @@ class TestCorpusFiles:
                 assert ks[0] >= prev_max
             if ks:
                 prev_max = ks[-1]
-
-    def test_compact_parquet_bounds_file_count(self, spark, tmp_path):
-        import glob
-
-        from datagrowth_spark.sources.files import compact_parquet
-
-        src = str(tmp_path / "small")
-        spark.range(1_000).repartition(50).write.parquet(src)
-        assert len(glob.glob(f"{src}/part-*.parquet")) == 50
-        n = compact_parquet(spark, src, target_records_per_file=500)
-        dest = src + "__compacted"
-        assert n == 2
-        assert len(glob.glob(f"{dest}/part-*.parquet")) == 2
-        assert spark.read.parquet(dest).count() == 1_000
 
     def test_zorder_key_interleaves_exact_tiles(self, spark):
         """bits=1, two dims: z = 2*(tile_a - 1) + (tile_b - 1), so the
@@ -1211,9 +1198,9 @@ def test_paginated_fetch_rejects_dataframe_with_driver_walker(spark, tmp_path):
 
 
 class TestCacheCompaction:
-    """compact(): fold batch dirs into one signature-prefix-partitioned
-    entry; pruned lookups; crash and race behavior (r5 verdict item 2 +
-    ADVICE r5 vacuum crash-safety)."""
+    """compact(): fold every entry into one flat latest-wins entry;
+    signature lookups (latest(signatures=)) on every layout; crash and
+    race behavior (r5 verdict item 2 + ADVICE r5 vacuum crash-safety)."""
 
     @staticmethod
     def _rows(spark, sigs, purge_at=None):
@@ -1247,10 +1234,11 @@ class TestCacheCompaction:
         names = [n for n in os.listdir(cache.path)
                  if not n.startswith((".", "_"))]
         assert len(names) == 1 and names[0].startswith("compact-")
-        # hash-partitioned layout by signature prefix
-        parts = [p for p in os.listdir(os.path.join(cache.path, names[0]))
-                 if p.startswith("sig_prefix=")]
-        assert parts and all(p.startswith("sig_prefix=p") for p in parts)
+        # flat layout: parquet files only, no partition subdirs
+        compacted = os.path.join(cache.path, names[0])
+        files = [f for f in os.listdir(compacted) if not f.startswith((".", "_"))]
+        assert files and all(f.endswith(".parquet") for f in files)
+        assert not any(os.path.isdir(os.path.join(compacted, f)) for f in files)
         after = sorted(r["signature"] for r in cache.latest().collect())
         assert after == before
         # a second compact folds the single entry into a fresh one
@@ -1272,55 +1260,49 @@ class TestCacheCompaction:
         got = sorted(r["signature"] for r in cache.latest().collect())
         assert got == sorted(live)
 
-    def test_wants_pruned_lookups_gate(self, spark, tmp_path):
-        """The per-fetch signature probe runs only where it pays: a
-        compacted layout (partition pruning), or a flat cache past
-        FLAT_PRUNE_MIN_DIRS batch dirs (pushed IN beats a full multi-dir
-        window). Fresh small caches — the growth-chain shape — skip it."""
-        import os as _os
+    @staticmethod
+    def _sig_frame(spark, sigs):
+        return spark.createDataFrame([(s,) for s in sigs], "signature string")
+
+    def test_signature_lookup_same_on_every_layout(self, spark, tmp_path):
+        """latest(signatures=) takes one path whatever the layout: an
+        empty cache, one batch dir, a long crawl's worth of batch dirs
+        holding duplicate rows, and a compacted cache all answer the
+        same rows as the full-window reference."""
         import shutil
 
-        from datagrowth_spark.sources.cache import FLAT_PRUNE_MIN_DIRS
-
         cache = ResourceCache(spark, str(tmp_path / "c"))
-        assert not cache.wants_pruned_lookups()  # empty
-        cache.append(self._rows(spark, self._sigs(2, "a")))
-        assert not cache.wants_pruned_lookups()  # one flat dir: probe loses
-        # A long crawl's worth of flat batch dirs (fabricated cheaply by
-        # cloning the committed one) flips the gate even uncompacted.
-        src = next(p for p in _os.listdir(cache.path) if p.startswith("batch-"))
-        for i in range(FLAT_PRUNE_MIN_DIRS):
-            shutil.copytree(_os.path.join(cache.path, src),
-                            _os.path.join(cache.path, f"batch-clone{i:04d}"))
-        assert cache.wants_pruned_lookups()
-        # Compacted: always prune, regardless of dir count.
-        cache2 = ResourceCache(spark, str(tmp_path / "c2"))
-        cache2.append(self._rows(spark, self._sigs(2, "b")))
-        cache2.compact()
-        assert cache2.has_compacted() and cache2.wants_pruned_lookups()
-        # A stray compact-* FILE (not dir) is flat everywhere — the
-        # layout classifier has one source of truth (_entries).
-        cache3 = ResourceCache(spark, str(tmp_path / "c3"))
-        _os.makedirs(cache3.path)
-        with open(_os.path.join(cache3.path, "compact-bogus"), "w") as fh:
-            fh.write("")
-        assert not cache3.has_compacted()
-        assert not cache3.wants_pruned_lookups()
+        sigs = self._sigs(4, "a")
+        want = sigs[1:3]
+        lookup = self._sig_frame(spark, want + self._sigs(1, "0"))
 
-    def test_pruned_lookup_hits_partition_filter(self, spark, tmp_path):
-        import re
+        def check(expected):
+            got = sorted(r["signature"] for r in cache.latest(signatures=lookup).collect())
+            ref = sorted(r["signature"] for r in
+                         cache.latest().join(lookup, "signature", "left_semi").collect())
+            assert got == ref == sorted(expected)
 
+        check([])
+        cache.append(self._rows(spark, sigs))
+        check(want)
+        src = next(p for p in os.listdir(cache.path) if p.startswith("batch-"))
+        for i in range(40):
+            shutil.copytree(os.path.join(cache.path, src),
+                            os.path.join(cache.path, f"batch-clone{i:04d}"))
+        check(want)
+        assert cache.compact() == 41
+        check(want)
+
+    def test_signature_lookup_on_compacted_cache(self, spark, tmp_path):
+        """A lookup frame may repeat signatures and name unknown ones:
+        the result holds each requested cached signature exactly once."""
         cache = ResourceCache(spark, str(tmp_path / "c"))
         sigs = self._sigs(16)
         cache.append(self._rows(spark, sigs))
         cache.compact()
-        pruned = cache.latest(prune_signatures=sigs[:3])
-        got = sorted(r["signature"] for r in pruned.collect())
+        lookup = self._sig_frame(spark, sigs[:3] + sigs[:2] + self._sigs(2, "0"))
+        got = sorted(r["signature"] for r in cache.latest(signatures=lookup).collect())
         assert got == sorted(sigs[:3])
-        plan = pruned._jdf.queryExecution().executedPlan().toString()
-        m = re.search(r"PartitionFilters: \[(.*?)\], PushedFilters", plan)
-        assert m and "sig_prefix" in m.group(1), plan[:2000]
-        assert "IN (p00,p01,p02)" in m.group(1)
 
     def test_pruned_lookup_spans_compacted_and_fresh_batches(self, spark, tmp_path):
         cache = ResourceCache(spark, str(tmp_path / "c"))
@@ -1330,9 +1312,111 @@ class TestCacheCompaction:
         fresh = self._sigs(4, "d")
         cache.append(self._rows(spark, fresh))  # post-compaction append
         want = [old[0], fresh[0]]
-        got = sorted(r["signature"]
-                     for r in cache.latest(prune_signatures=want).collect())
+        got = sorted(r["signature"] for r in
+                     cache.latest(signatures=self._sig_frame(spark, want)).collect())
         assert got == sorted(want)
+
+    def test_signature_semi_join_planned_below_window(self, spark, tmp_path):
+        """The signature frame is semi-joined into the scan BELOW the
+        latest-wins window (Spark does not push a left_semi join through
+        a Window), so the window sorts only the requested rows."""
+        cache = ResourceCache(spark, str(tmp_path / "c"))
+        sigs = self._sigs(6)
+        cache.append(self._rows(spark, sigs))
+        plan = cache.latest(signatures=self._sig_frame(spark, sigs[:2])) \
+            ._jdf.queryExecution().optimizedPlan().toString()
+        lines = plan.splitlines()
+        window = next(i for i, line in enumerate(lines) if "Window [" in line)
+        semi = next(i for i, line in enumerate(lines) if "Join LeftSemi" in line)
+        assert window < semi, plan
+        assert lines[semi].index("Join") > lines[window].index("Window"), plan
+
+    @pytest.mark.parametrize("seed", [1, 2, 3])
+    def test_signature_lookup_matches_brute_force(self, spark, tmp_path, seed):
+        """Random fetch histories — re-fetches, failures newer than
+        successes, expired purge_at rows — spread over a legacy loose
+        file without the chain column, batch dirs and a compact dir:
+        latest(signatures=S) equals the full-window semi-join and a
+        pure-Python latest-live-row reference."""
+        import datetime as dt
+        import random
+
+        from datagrowth_spark.sources.cache import RESPONSE_SCHEMA
+
+        rng = random.Random(seed)
+        now = dt.datetime(2026, 1, 1)
+        past, future = now - dt.timedelta(hours=1), now + dt.timedelta(hours=1)
+        cache = ResourceCache(spark, str(tmp_path / "c"), now_fn=lambda: now)
+        pool = self._sigs(10, "5")
+        history = []
+
+        def batch(n, forced=()):
+            picks = [(rng.choice(pool), rng.choice([200, 200, 503]),
+                      rng.choice([None, None, past, future])) for _ in range(n)]
+            rows = []
+            for sig, status, purge in picks + list(forced):
+                tick = len(history) + len(rows) + 1
+                rows.append((sig, "GET", "u", None, None, status, "{}", f"body {tick}",
+                             now - dt.timedelta(minutes=1000 - tick), purge, sig))
+            history.extend(rows)
+            return spark.createDataFrame(rows, RESPONSE_SCHEMA)
+
+        cache.append(batch(8, [(pool[0], 200, None), (pool[1], 200, None)]))
+        for _ in range(2):
+            cache.append(batch(8))
+        cache.compact()
+        legacy = str(tmp_path / "legacy")
+        batch(6).drop("chain").coalesce(1).write.parquet(legacy)
+        [part] = [f for f in os.listdir(legacy) if f.endswith(".parquet")]
+        os.replace(os.path.join(legacy, part), os.path.join(cache.path, part))
+        for _ in range(2):
+            cache.append(batch(8))
+        # newest rows: a failure over a success, an expired re-fetch
+        cache.append(batch(8, [(pool[0], 503, None), (pool[1], 200, past)]))
+        kinds = sorted(n.split("-")[0] for n in os.listdir(cache.path)
+                       if not n.startswith((".", "_")))
+        assert kinds == ["batch"] * 3 + ["compact", "part"]
+
+        want_sigs = pool[:6]
+        lookup = self._sig_frame(spark, want_sigs + want_sigs[:2] + self._sigs(1, "0"))
+        ref = {}
+        for r in history:
+            live = r[9] is None or r[9] > now
+            if live and r[0] in want_sigs and (r[0] not in ref or r[8] > ref[r[0]][8]):
+                ref[r[0]] = r
+        want = sorted((s, r[5], r[7]) for s, r in ref.items())
+        assert ref[pool[0]][5] == 503 and ref[pool[1]][7] != history[-1][7]
+
+        def key(df):
+            return sorted((r["signature"], r["status"], r["body"]) for r in df.collect())
+
+        assert key(cache.latest(signatures=lookup)) == want
+        assert key(cache.latest().join(lookup, "signature", "left_semi")) == want
+        assert {r["chain"] for r in cache.latest(signatures=lookup).collect()} <= set(pool)
+
+    def test_legacy_sig_prefix_compact_dir_reads_and_folds(self, spark, tmp_path):
+        """A compact dir written in the older sig_prefix=pXX partitioned
+        layout reads back with the response columns only, serves
+        signature lookups, and folds into the flat layout."""
+        from datagrowth_spark.sources.cache import RESPONSE_SCHEMA
+
+        cache = ResourceCache(spark, str(tmp_path / "c"))
+        old = self._sigs(6, "b")
+        self._rows(spark, old) \
+            .withColumn("sig_prefix", F.concat(F.lit("p"), F.substring("signature", 1, 2))) \
+            .write.partitionBy("sig_prefix").parquet(os.path.join(cache.path, "compact-legacy"))
+        fresh = self._sigs(2, "c")
+        cache.append(self._rows(spark, fresh))
+        assert cache.latest().columns == [f.name for f in RESPONSE_SCHEMA.fields]
+        assert sorted(r["signature"] for r in cache.latest().collect()) == sorted(old + fresh)
+        got = cache.latest(signatures=self._sig_frame(spark, [old[1], fresh[0]]))
+        assert sorted(r["signature"] for r in got.collect()) == sorted([old[1], fresh[0]])
+        assert cache.compact() == 2
+        [entry] = [n for n in os.listdir(cache.path) if not n.startswith((".", "_"))]
+        assert entry.startswith("compact-") and entry != "compact-legacy"
+        assert not any(n.startswith("sig_prefix=")
+                       for n in os.listdir(os.path.join(cache.path, entry)))
+        assert sorted(r["signature"] for r in cache.latest().collect()) == sorted(old + fresh)
 
     def test_crash_mid_compact_loses_nothing(self, spark, tmp_path, monkeypatch):
         """Crash at the publish rename: the old entries are untouched
@@ -1388,28 +1472,62 @@ class TestCacheCompaction:
         got = sorted(r["signature"] for r in cache.latest().collect())
         assert got == sorted(base + racing)
 
-    def test_fetch_pruned_path_matches_join_path(self, spark, tmp_path, monkeypatch):
-        """The driver-bounded fetch path (signatures collected, scans
-        pruned) must return exactly what the join path returns — run
-        the same warm fetch with the threshold forced to 0 so the
-        second run exercises the unbounded join fallback."""
-        import datagrowth_spark.sources.cache as cache_mod
-
+    def test_fetch_pruned_path_matches_join_path(self, spark, tmp_path):
+        """fetch's result goes through latest(signatures=); it must equal
+        the full-window semi-join on the same signatures, on the flat
+        cache and again after compaction."""
         cache = ResourceCache(spark, str(tmp_path / "c"))
         reqs = [http_request("http://mockapi/entities", params={"page": p})
                 for p in range(3)]
-        out1 = fetch(requests_to_df(spark, reqs), cache,
-                     transport=mock_api_transport, backoff_delays=[],
-                     fetch_partitions=1)
-        rows1 = sorted(r["signature"] for r in out1.collect())
-        cache.compact()
-        monkeypatch.setattr(cache_mod, "FETCH_PRUNE_THRESHOLD", 0)
-        out2 = fetch(requests_to_df(spark, reqs), cache,
-                     transport=mock_api_transport, backoff_delays=[],
-                     fetch_partitions=1, cache_only=True)
-        monkeypatch.undo()
-        out3 = fetch(requests_to_df(spark, reqs), cache,
-                     transport=mock_api_transport, backoff_delays=[],
-                     fetch_partitions=1, cache_only=True)
-        assert sorted(r["signature"] for r in out2.collect()) == rows1
-        assert sorted(r["signature"] for r in out3.collect()) == rows1
+
+        def rows(df):
+            return sorted((r["signature"], r["body"]) for r in df.collect())
+
+        for compacted in (False, True):
+            if compacted:
+                cache.compact()
+            reqs_df = requests_to_df(spark, reqs)
+            out = fetch(reqs_df, cache, transport=mock_api_transport,
+                        backoff_delays=[], fetch_partitions=1,
+                        cache_only=compacted)
+            ref = cache.latest().join(reqs_df.select("signature"), "signature", "left_semi")
+            assert len(rows(out)) == 3 and rows(out) == rows(ref)
+
+
+#: Spark jobs of one warm fetch — 3 requests, all hits, on the mock
+#: transport against a 3-batch cache (local[4], 4 shuffle partitions) —
+#: and of collecting its result. The signature semi-joins below the
+#: window take 2 AQE stage jobs; the cache is read with an explicit
+#: schema, so no read pays a schema-inference job.
+FETCH_JOB_BUDGET = 13
+#: Spark jobs of ResourceCache.compact over a few small entries: the
+#: latest-wins window's shuffle and the write it feeds, coalesced to the
+#: footer-sized file count with no second shuffle; nothing counts rows.
+CACHE_COMPACT_JOB_BUDGET = 2
+
+
+class TestCacheJobs:
+    @staticmethod
+    def _three_batch_cache(spark, path):
+        cache = ResourceCache(spark, path)
+        reqs = [http_request("http://mockapi/entities", params={"page": p})
+                for p in range(3)]
+        for req in reqs:
+            fetch(requests_to_df(spark, [req]), cache,
+                  transport=mock_api_transport, backoff_delays=[])
+        return cache, reqs
+
+    def test_warm_fetch_within_job_budget(self, spark, tmp_path):
+        cache, reqs = self._three_batch_cache(spark, str(tmp_path / "c"))
+        reqs_df = requests_to_df(spark, reqs)
+        rows, jobs = _jobs_in_group(spark, "warm-fetch", lambda: fetch(
+            reqs_df, cache, transport=mock_api_transport, backoff_delays=[]).collect())
+        assert len(jobs) <= FETCH_JOB_BUDGET, jobs
+        assert sorted(r["signature"] for r in rows) == sorted(r["signature"] for r in reqs)
+
+    def test_compact_within_job_budget(self, spark, tmp_path):
+        cache, reqs = self._three_batch_cache(spark, str(tmp_path / "c"))
+        removed, jobs = _jobs_in_group(spark, "cache-compact", cache.compact)
+        assert removed == 3
+        assert len(jobs) <= CACHE_COMPACT_JOB_BUDGET, jobs
+        assert cache.latest().count() == 3
